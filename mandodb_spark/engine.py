@@ -246,7 +246,6 @@ class TSDB:
         from pyspark.sql import functions as F
 
         from .functions.promql_parser import _matcher_filter
-        from .operators.tsdb_ops import time_predicate
         from .sources import prompb
         from .sources.loaders import to_remote_write
 
@@ -256,10 +255,8 @@ class TSDB:
             # end_ms] iff ceil(start_ms/1000) <= s <= floor(end_ms/1000)
             start = -(-q["start_ms"] // 1000)
             end = q["end_ms"] // 1000
-            rel = self.store.relation()
-            rel = rel.filter(time_predicate(start, end, "seg" in rel.columns,
-                                            self.segment_duration))
-            filt = _matcher_filter(rel, None, q["matchers"])
+            filt = _matcher_filter(self._pruned_relation(start, end), None,
+                                   q["matchers"])
             grouped = to_remote_write(filt.select("labels", "ts", "value"))
             rows = grouped.withColumn("_n", F.size("samples")).collect()
             self._check_sample_limit(sum(r["_n"] for r in rows), sample_limit)
@@ -302,7 +299,6 @@ class TSDB:
         compressed chunk bytes, not raw samples — strictly less driver
         traffic than :meth:`remote_read` for the same selection."""
         from .functions.promql_parser import _matcher_filter
-        from .operators.tsdb_ops import time_predicate
         from .sources import prompb
         from .sources.loaders import to_remote_write
 
@@ -311,10 +307,8 @@ class TSDB:
                 prompb.decode_read_request(prompb.snappy_decompress(payload))):
             start = -(-q["start_ms"] // 1000)
             end = q["end_ms"] // 1000
-            rel = self.store.relation()
-            rel = rel.filter(time_predicate(start, end, "seg" in rel.columns,
-                                            self.segment_duration))
-            filt = _matcher_filter(rel, None, q["matchers"])
+            filt = _matcher_filter(self._pruned_relation(start, end), None,
+                                   q["matchers"])
             grouped = prompb.xor_chunks_from_timeseries(
                 to_remote_write(filt.select("labels", "ts", "value")),
                 samples_per_chunk=samples_per_chunk,
@@ -382,11 +376,8 @@ class TSDB:
 
         ast = promql_parser.parse(query)
         lo, hi = promql_parser.time_window(ast, at_ts, lookback)
-        rel = self.store.relation()
-        pruned = rel.filter(tsdb_ops.time_predicate(
-            lo, hi, "seg" in rel.columns, self.segment_duration))
         return promql_parser.eval_instant(
-            pruned, ast, at_ts, lookback,
+            self._pruned_relation(lo, hi), ast, at_ts, lookback,
             hist_rel=self._pruned_hist_rel(lo, hi),
             hist_metrics=self._hist_metric_names(),
         )
@@ -416,6 +407,14 @@ class TSDB:
             self._hist_metric_cache = cached
         return cached
 
+    def _pruned_relation(self, lo: int, hi: int, store=None) -> DataFrame:
+        """``store``'s relation (default: the samples store) filtered to
+        [lo, hi] by ``time_predicate``, so segment-partition pruning and
+        row-group skipping apply at the scan."""
+        rel = (self.store if store is None else store).relation()
+        return rel.filter(tsdb_ops.time_predicate(
+            lo, hi, "seg" in rel.columns, self.segment_duration))
+
     def _pruned_hist_rel(self, lo: int, hi: int) -> "DataFrame | None":
         """The native-histogram relation, seg-pruned to the query window —
         or None when this TSDB has never written histogram samples (the
@@ -423,9 +422,7 @@ class TSDB:
         store = self.hist_store_if_exists()
         if store is None:
             return None
-        rel = store.relation()
-        return rel.filter(tsdb_ops.time_predicate(
-            lo, hi, "seg" in rel.columns, self.segment_duration))
+        return self._pruned_relation(lo, hi, store)
 
     def promql_range(self, query: str, start: int, end: int, step: int,
                      lookback: int = 300) -> DataFrame:
@@ -439,11 +436,8 @@ class TSDB:
         ast = promql_parser.parse(query)
         lo, _ = promql_parser.time_window(ast, start, lookback)
         hi = max(int(end), promql_parser.time_window(ast, end, lookback)[1])
-        rel = self.store.relation()
-        pruned = rel.filter(tsdb_ops.time_predicate(
-            lo, hi, "seg" in rel.columns, self.segment_duration))
         return promql_parser.eval_range(
-            pruned, ast, start, end, step, lookback,
+            self._pruned_relation(lo, hi), ast, start, end, step, lookback,
             hist_rel=self._pruned_hist_rel(lo, hi),
             hist_metrics=self._hist_metric_names(),
         )
@@ -509,11 +503,9 @@ class TSDB:
         ast = promql_parser.parse(query)
         lo, _ = promql_parser.time_window(ast, start, lookback)
         hi = max(int(end), promql_parser.time_window(ast, end, lookback)[1])
-        rel = self.store.relation()
-        pruned = rel.filter(tsdb_ops.time_predicate(
-            lo, hi, "seg" in rel.columns, self.segment_duration))
         return promql_parser.eval_alerts(
-            pruned, ast, for_duration, start, end, step, lookback)
+            self._pruned_relation(lo, hi), ast, for_duration, start, end,
+            step, lookback)
 
     def promql_record(self, rule_name: str, query: str, start: int,
                       end: int, step: int, lookback: int = 300,

@@ -1073,7 +1073,8 @@ def grid_hist_over_time(rel: DataFrame, start: int, end: int, window: int,
 
     if mode not in HIST_OVER_TIME:
         raise ValueError(f"grid_hist_over_time mode {mode!r}")
-    _check_fanout(window - 1, step, f"grid_hist_over_time({mode})")
+    _check_fanout(window - 1, start, end, step,
+                  f"grid_hist_over_time({mode})")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
     covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
@@ -1110,7 +1111,7 @@ def grid_hist_instant(rel: DataFrame, start: int, end: int, step: int,
     covering-points + one hash agg; fan-out capped identically)."""
     from .promql import _check_fanout, _grid_points
 
-    _check_fanout(lookback, step, "grid_hist_instant")
+    _check_fanout(lookback, start, end, step, "grid_hist_instant")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - lookback, end))
     covered = rel.withColumn("__t", _grid_points(lookback, start, end, step))
@@ -1167,7 +1168,7 @@ def grid_hist_rate(rel: DataFrame, start: int, end: int, window: int,
 
     if mode not in ("rate", "increase", "delta"):
         raise ValueError(f"grid_hist_rate mode {mode!r}")
-    _check_fanout(window - 1, step, f"grid_hist_rate({mode})")
+    _check_fanout(window - 1, start, end, step, f"grid_hist_rate({mode})")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
     sc, _ = _step_frames(rel, mode != "delta")

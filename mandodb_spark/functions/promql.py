@@ -453,8 +453,9 @@ def rate_sliding(rel: DataFrame, start: int, end: int, window: int, step: int) -
 # no per-step driver loop, no window over the whole series.
 
 
-#: Hard cap on the grid primitives' explode fan-out (reach/step + 1 —
-#: the duplication factor per covering sample).  ``rate(x[30d])`` at a
+#: Hard cap on the grid primitives' explode fan-out (reach/step + 1,
+#: capped by the grid's point count — the duplication factor per covering
+#: sample; a one-point instant grid never explodes).  ``rate(x[30d])`` at a
 #: 30s step would duplicate every sample 86 400×; nothing about corpus
 #: size saves that shape, so it fails fast instead (SCALE.md "degenerate
 #: shape").  The parser auto-routes capped sum/count/avg ``_over_time``
@@ -467,8 +468,15 @@ GRID_FANOUT_CAP = 500
 _SLIDING = {"sum", "count", "avg"}
 
 
-def _check_fanout(reach_incl: int, step: int, what: str) -> None:
-    f = reach_incl // step + 1
+def _fanout(reach_incl: int, start: int, end: int, step: int) -> int:
+    """Explode factor of a grid primitive: the eval points one sample can
+    serve — reach/step + 1, but never more than the grid has."""
+    return min(reach_incl // step + 1, (end - start) // step + 1)
+
+
+def _check_fanout(reach_incl: int, start: int, end: int, step: int,
+                  what: str) -> None:
+    f = _fanout(reach_incl, start, end, step)
     if f > GRID_FANOUT_CAP:
         raise ValueError(
             f"{what}: window/step fan-out {f} exceeds GRID_FANOUT_CAP="
@@ -497,7 +505,7 @@ def grid_instant(rel: DataFrame, start: int, end: int, step: int,
     """Instant vector at EVERY eval point of the grid: newest sample per
     series within the lookback window of each t.  Output (series_key,
     labels, ts=eval point, value)."""
-    _check_fanout(lookback, step, "grid_instant")
+    _check_fanout(lookback, start, end, step, "grid_instant")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - lookback, end))
     covered = rel.withColumn("__t", _grid_points(lookback, start, end, step))
@@ -516,7 +524,7 @@ def grid_over_time(rel: DataFrame, fn: str, start: int, end: int,
     """``<fn>_over_time(sel[window])`` at every grid eval point (SLIDING,
     unlike the tumbling :func:`over_time`).  ``q`` feeds
     quantile_over_time's interpolated percentile."""
-    _check_fanout(window - 1, step, f"grid_over_time({fn})")
+    _check_fanout(window - 1, start, end, step, f"grid_over_time({fn})")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
     covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
@@ -541,7 +549,7 @@ def grid_rate(rel: DataFrame, start: int, end: int, window: int, step: int,
     if mode not in ("rate", "increase", "delta", "irate", "idelta",
                     "changes", "resets"):
         raise ValueError(f"grid_rate mode {mode!r}")
-    _check_fanout(window - 1, step, f"grid_rate({mode})")
+    _check_fanout(window - 1, start, end, step, f"grid_rate({mode})")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
     covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
@@ -602,7 +610,7 @@ def grid_mad(rel: DataFrame, start: int, end: int, window: int,
     equi-join on (series, t)); groups are window-sized, so the exact
     ``percentile`` is the right tool here (unlike the cross-series
     quantile aggregators)."""
-    _check_fanout(window - 1, step, "grid_mad")
+    _check_fanout(window - 1, start, end, step, "grid_mad")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
     covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
@@ -1402,7 +1410,7 @@ def grid_holt_winters(rel: DataFrame, start: int, end: int, window: int,
     runs, over per-(series, t) sorted value arrays assembled by the
     covering-points explode — array size bounded by samples-per-window,
     one hash aggregate, no Python."""
-    _check_fanout(window - 1, step, "grid_holt_winters")
+    _check_fanout(window - 1, start, end, step, "grid_holt_winters")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
     covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
@@ -1427,7 +1435,7 @@ def grid_deriv(rel: DataFrame, start: int, end: int, window: int,
     stability, so the eval point sits at x = window − 1 and
     predict_linear extrapolates to x = window − 1 + horizon, exactly the
     instant form's arithmetic."""
-    _check_fanout(window - 1, step, "grid_deriv")
+    _check_fanout(window - 1, start, end, step, "grid_deriv")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
     covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))

@@ -13,18 +13,24 @@ Public surface::
     TSDB.promql / TSDB.promql_range     -> the same, store-backed and
                                            segment-pruned (engine.py)
 
+ONE evaluator serves both: the expression is evaluated on the grid
+t = start + k·step ≤ end, and an instant query at ``t`` is the one-point
+range query ``[t, t]`` — as Prometheus' ``NewInstantQuery`` runs it —
+projected to the instant result shapes.
+
 Semantics (Prometheus query at time ``t``):
 
 - a vector selector matches series by ``__name__`` + label matchers
   (``=``, ``!=``, ``=~``, ``!~`` — regexes fully anchored, as PromQL
-  anchors them) and yields the newest sample per series within the
-  lookback window;
+  anchors them, and validated at parse time) and yields the newest
+  sample per series within the lookback window;
 - a range selector ``sel[range]`` feeds its enclosing range function the
   samples with ``ts ∈ [t − range + 1, t]`` (PromQL's half-open
   ``(t − range, t]`` on integer-second timestamps);
 - ``offset d`` shifts a selector's evaluation time back by ``d``;
-  ``@ ts`` pins it to an absolute time — literal unix timestamps and the
-  ``start()`` / ``end()`` sugar (instant mode: both are ``at_ts``);
+  ``@ ts`` pins a selector, range selector or subquery to an absolute
+  time — literal unix timestamps and the ``start()`` / ``end()`` sugar
+  (instant queries: both are ``at_ts``) — constant across the grid;
 - aggregations support ``by (…)`` / ``without (…)`` in either position;
   binary operators support ``on``/``ignoring`` + ``group_left``/
   ``group_right`` matching and ``bool``;
@@ -37,25 +43,22 @@ Semantics (Prometheus query at time ``t``):
   avg`` / ``histogram_stddev`` / ``histogram_stdvar``, ``rate`` /
   ``increase`` / ``delta`` counter math, ``sum``/``avg`` aggregation and
   ``+ - * /`` histogram arithmetic all lower to ``functions.native_hist``
-  (instant AND range mode, grid-evaluated);
+  (grid-evaluated);
 - general subqueries ``expr[r:s]`` evaluate the inner expression at
   absolute step-aligned points and feed the enclosing range function —
-  any inner expression, nested subqueries included (range mode lowers
-  through the same grid engine with fan-out caps); HISTOGRAM-valued
-  subqueries (``rate(h[5m:1m])``, both modes) feed the native counter
-  math over histogram pseudo-samples.
+  any inner expression, nested subqueries included, through the same
+  grid engine with fan-out caps; HISTOGRAM-valued subqueries
+  (``rate(h[5m:1m])``) feed the native counter math over histogram
+  pseudo-samples.
 
 Deliberate deltas (documented, raising ``PromqlError`` where relevant):
 subqueries require an explicit step (no default-resolution inference);
 histogram-valued subqueries are defined for ``rate``/``increase``/
-``delta`` only (over-time aggregates over them raise);
-``@``-modifiers fix instant selectors in both instant and range
-evaluation (constant across the grid, as PromQL) and are rejected inside
-subqueries and on range selectors in range queries; classic
+``delta`` and the avg/sum/count/last over-time aggregates only; classic
 ``histogram_quantile`` over a FLOAT vector reads bucket bounds from the
-``le`` LABEL (``promql.histogram_quantile_vector``); ``scalar()``
-collects its (≤1-row by definition) argument.  Everything else in
-functions/promql.py is reachable from text.
+``le`` LABEL (``promql.histogram_quantile_vector``); function and
+aggregation parameters (``topk``'s k, ``clamp`` bounds, …) must be plain
+scalars.  Everything else in functions/promql.py is reachable from text.
 
 Grammar is a hand-rolled Pratt/recursive-descent pair — no parser
 dependency, errors carry the token position.  Reference for semantics:
@@ -65,6 +68,7 @@ DataFrame evaluation model.
 
 from __future__ import annotations
 
+import math
 import re
 from dataclasses import dataclass
 
@@ -72,6 +76,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import promql
+from ..matchers import check_regex
 from ..operators import sketch as _sketch
 
 # --------------------------------------------------------------------- lexer
@@ -382,6 +387,11 @@ class _Parser:
                 vt = self.next()
                 if vt.kind != "STRING":
                     raise PromqlError(f"expected string at {vt.pos}")
+                if op.text in ("=~", "!~"):
+                    try:
+                        check_regex(vt.text[1:-1])
+                    except ValueError as e:
+                        raise PromqlError(f"{e} at {vt.pos}") from None
                 matchers.append((lt.text, op.text, vt.text[1:-1]))
                 if self.peek().text == ",":
                     self.next()
@@ -566,19 +576,15 @@ def time_window(node_or_query, at_ts: int, lookback: int = 300) -> tuple[int, in
 
 
 # ------------------------------------------------------------------ evaluate
-
-#: range functions: name -> (callable(rel, start, end, *params), n_params)
-_RANGE_FNS = {
-    "rate": promql.rate,
-    "irate": promql.irate,
-    "delta": promql.delta,
-    "idelta": promql.idelta,
-    "increase": promql.increase,
-    "deriv": promql.deriv,
-    "resets": promql.resets,
-    "changes": promql.changes,
-    "mad_over_time": promql.mad_over_time,  # (rel, start, end, step) below
-}
+# ONE evaluator, Prometheus query_range style: the expression at EVERY grid
+# point t = start + k·step ≤ end.  Vectors are (labels, ts, value) frames —
+# one row per series per eval point — produced by the grid_* primitives in
+# functions/promql.py (explode-to-covering-points + hash agg; no per-step
+# loop, no whole-series window).  Aggregations group by (labels, ts);
+# binary operators match on (label-key, ts).  An instant query is the
+# one-point grid [t, t], exactly as Prometheus' NewInstantQuery runs it,
+# and an @-pinned argument is evaluated on a one-point grid at its pinned
+# time, then held constant across the grid.
 
 _OVER_TIME_FNS = {f"{k}_over_time": k for k in (
     "avg", "min", "max", "sum", "count", "stddev", "stdvar", "last",
@@ -604,12 +610,24 @@ _HIST_SCALAR_FNS = {
 }
 
 
-class _Ctx:
-    def __init__(self, rel: DataFrame, at_ts: int, lookback: int,
-                 hist_rel: DataFrame | None = None,
+#: grid_rate modes, by function name
+_RANGE_MODES = {k: k for k in (
+    "rate", "increase", "delta", "irate", "idelta", "changes", "resets")}
+
+#: result-ordering functions: a no-op inside the evaluation (Prometheus:
+#: range results have a fixed order), the final ordering of an instant query
+_SORT_FNS = {"sort", "sort_desc", "sort_by_label", "sort_by_label_desc"}
+
+
+class _RCtx:
+    """Evaluation grid t = start + k·step ≤ end over the samples relation
+    (and the native-histogram relation, when configured)."""
+
+    def __init__(self, rel: DataFrame, start: int, end: int, step: int,
+                 lookback: int, hist_rel: DataFrame | None = None,
                  hist_metrics: "set[str] | None" = None) -> None:
         self.rel = rel
-        self.t = int(at_ts)
+        self.start, self.end, self.step = int(start), int(end), int(step)
         self.lookback = int(lookback)
         self.hist_rel = hist_rel
         self._hist_metrics: set[str] | None = hist_metrics
@@ -635,6 +653,23 @@ class _Ctx:
                     if r["__m"] is not None
                 }
         return self._hist_metrics
+
+    def sub(self, start: int, end: int, step: int) -> "_RCtx":
+        """Another grid over the same relations (subquery inner grids,
+        one-point grids)."""
+        return _RCtx(self.rel, start, end, step, self.lookback,
+                     hist_rel=self.hist_rel, hist_metrics=self.hist_metrics)
+
+    def at(self, t: int) -> "_RCtx":
+        """The one-point grid [t, t] — an instant evaluation at ``t``."""
+        return self.sub(t, t, 1)
+
+    def grid(self) -> DataFrame:
+        """The eval points as a (ts) frame — generated, never a scan."""
+        n = (self.end - self.start) // self.step + 1
+        return self.rel.sparkSession.range(n).select(
+            (F.lit(self.start) + F.col("id") * self.step)
+            .cast("long").alias("ts"))
 
 
 def _matcher_filter(rel: DataFrame, name: str | None, matchers) -> DataFrame:
@@ -664,380 +699,12 @@ def _matcher_filter(rel: DataFrame, name: str | None, matchers) -> DataFrame:
     return out
 
 
-def _strip(df: DataFrame) -> DataFrame:
-    # Uniform vector schema (labels, value:double) so set ops can union
-    # results whose underlying function returned integer counts.
-    return df.select("labels", F.col("value").cast("double").alias("value"))
-
-
 def _drop_name(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "labels",
         F.map_filter(F.col("labels"),
                      lambda k, _: k != F.lit(promql.METRIC_NAME_LABEL)),
     )
-
-
-def _eval(node, ctx: _Ctx):
-    """Returns ('scalar', float) | ('vector', DataFrame(labels, value))."""
-    kind = node[0]
-    if kind == "num":
-        return ("scalar", node[1])
-    if kind == "str":
-        raise PromqlError("string literal outside function argument")
-    if kind == "unary":
-        k, v = _eval(node[2], ctx)
-        if k == "scalar":
-            return ("scalar", -v)
-        return ("vector", _drop_name(v.withColumn("value", -F.col("value"))))
-    if kind == "selector":
-        _, name, matchers, range_s, offset_s, at_s = node
-        if range_s is not None:
-            # inner positions only — TOP-LEVEL matrix selectors are
-            # handled by eval_instant before _eval runs
-            raise PromqlError(
-                f"range selector {name or ''}[{range_s}s] outside a range function")
-        base = at_s if at_s is not None else ctx.t
-        if name is not None and name in ctx.hist_metrics:
-            from . import native_hist as nh
-
-            filt = _matcher_filter(ctx.hist_rel, name, matchers)
-            return ("hvector",
-                    nh.hist_instant(filt, base - offset_s, ctx.lookback))
-        filt = _matcher_filter(ctx.rel, name, matchers)
-        vec = promql.instant(filt, base - offset_s, ctx.lookback)
-        return ("vector", _strip(vec))
-    if kind == "call":
-        return _eval_call(node, ctx)
-    if kind == "agg":
-        return _eval_agg(node, ctx)
-    if kind == "binop":
-        return _eval_binop(node, ctx)
-    if kind == "subquery":
-        # inner positions only — a TOP-LEVEL subquery is matrix-typed and
-        # handled by eval_instant before _eval runs
-        raise PromqlError(
-            "a subquery is only valid at the top level or under a "
-            "range function")
-    raise PromqlError(f"unhandled node {kind}")
-
-
-def _subquery_points(node, ctx: _Ctx):
-    """The inner expression of ``expr[r:s]`` evaluated ONCE on the
-    aligned subquery grid (absolute multiples of ``s`` covering
-    ``(t − offset − r, t − offset]``) via the RANGE evaluator — any
-    expression ``_reval`` lowers (selectors, calls, aggregations,
-    binops) becomes pseudo-samples that the range functions consume
-    unchanged.  This is what makes arbitrary subquery inners
-    distributed: ONE fine-grid evaluation, never a per-step replay of
-    the inner plan.  Returns (kind, pseudo_rel, window start, window
-    end): kind "vector" → ``(labels, ts, value)`` rows, "hvector" →
-    histogram pseudo-samples ``(labels, ts, hist)`` (the inner routed to
-    the native-histogram store) — the counter-math callers accept both,
-    everything else rejects hvector with a pointed error."""
-    _, inner, range_s, step_s, offset_s, at_s = node
-    s_end = (at_s if at_s is not None else ctx.t) - offset_s
-    s_start = s_end - range_s + 1  # (t-r, t] on integer seconds
-    lo = -(-s_start // step_s) * step_s
-    hi = (s_end // step_s) * step_s
-    if hi < lo:
-        empty = ctx.rel.sparkSession.createDataFrame(
-            [], "labels map<string,string>, ts long, value double")
-        return "vector", empty, s_start, s_end
-    k, v = _reval(inner, _RCtx(ctx.rel, lo, hi, step_s, ctx.lookback,
-                               hist_rel=ctx.hist_rel,
-                               hist_metrics=ctx._hist_metrics))
-    if k == "hvector":
-        return "hvector", v.select("labels", "ts", "hist"), s_start, s_end
-    if k != "vector":
-        raise PromqlError("subquery inner must be a vector expression")
-    return "vector", v.select("labels", "ts", "value"), s_start, s_end
-
-
-def _range_args(node, ctx: _Ctx, fname: str):
-    if node[0] == "subquery":
-        # rate(expr[r:s]) and friends: the subquery's eval points are
-        # pseudo-samples; the range function runs over them unchanged
-        kind, pseudo, s_start, s_end = _subquery_points(node, ctx)
-        if kind == "hvector":
-            raise PromqlError(
-                f"{fname} over a histogram-valued subquery is not defined "
-                "(histogram subqueries support rate/increase/delta)")
-        return pseudo, s_start, s_end, node[2]
-    if node[0] != "selector" or node[3] is None:
-        raise PromqlError(f"{fname} needs a range selector argument")
-    _, name, matchers, range_s, offset_s, at_s = node
-    filt = _matcher_filter(ctx.rel, name, matchers)
-    end = (at_s if at_s is not None else ctx.t) - offset_s
-    start = end - range_s + 1  # (t-range, t] on integer seconds
-    return filt, start, end, range_s
-
-
-def _hist_range_arg(arg, ctx: _Ctx):
-    """If ``arg`` is a range selector over a NATIVE-HISTOGRAM metric,
-    return (filtered hist relation, start, end); else None."""
-    if (arg[0] == "selector" and arg[3] is not None and arg[1] is not None
-            and arg[1] in ctx.hist_metrics):
-        _, name, matchers, range_s, offset_s, at_s = arg
-        filt = _matcher_filter(ctx.hist_rel, name, matchers)
-        end = (at_s if at_s is not None else ctx.t) - offset_s
-        return filt, end - range_s + 1, end
-    return None
-
-
-def _eval_call(node, ctx: _Ctx):
-    _, fname, args = node
-
-    if fname in ("rate", "increase", "delta") and len(args) == 1:
-        # native-histogram counter math: rate(h[5m]) stays histogram-valued
-        hr = _hist_range_arg(args[0], ctx)
-        if hr is not None:
-            from . import native_hist as nh
-
-            filt, start, end = hr
-            fn = {"rate": nh.hist_rate, "increase": nh.hist_increase,
-                  "delta": nh.hist_delta}[fname]
-            out = fn(filt, start, end).withColumn(
-                "ts", F.lit(ctx.t).cast("long"))
-            return ("hvector", out)
-        if args[0][0] == "subquery":
-            # rate(h[r:s]) — the subquery's grid points are histogram
-            # pseudo-samples; the whole-range counter math runs over
-            # them unchanged (step frames between consecutive grid
-            # points).  Float-valued inners take the same evaluation
-            # straight into the float range function — one inner grid
-            # pass either way.
-            kind, pseudo, s_start, s_end = _subquery_points(args[0], ctx)
-            if kind == "hvector":
-                from . import native_hist as nh
-
-                fn = {"rate": nh.hist_rate, "increase": nh.hist_increase,
-                      "delta": nh.hist_delta}[fname]
-                out = fn(pseudo, s_start, s_end).withColumn(
-                    "ts", F.lit(ctx.t).cast("long"))
-                return ("hvector", out)
-            return ("vector", _strip(
-                _RANGE_FNS[fname](pseudo, s_start, s_end)))
-    if fname in _HIST_SCALAR_FNS:
-        (arg,) = args
-        k, v = _eval(arg, ctx)
-        if k != "hvector":
-            raise PromqlError(
-                f"{fname} takes a native-histogram vector (got {k}; classic "
-                "le-bucket series have no structured sample to read)")
-        from . import native_hist as nh
-
-        out = nh.hist_scalar(v, _HIST_SCALAR_FNS[fname])
-        return ("vector", _drop_name(_strip(out)))
-    if fname == "histogram_fraction":
-        lo, hi, arg = args
-        lov, hiv = _eval(lo, ctx), _eval(hi, ctx)
-        if lov[0] != "scalar" or hiv[0] != "scalar":
-            raise PromqlError("histogram_fraction needs scalar bounds")
-        k, v = _eval(arg, ctx)
-        if k != "hvector":
-            raise PromqlError("histogram_fraction takes a native-histogram vector")
-        from . import native_hist as nh
-
-        out = nh.hist_fraction(v, float(lov[1]), float(hiv[1]))
-        return ("vector", _drop_name(_strip(out)))
-    if fname in _RANGE_FNS and fname != "mad_over_time":
-        (arg,) = args
-        filt, start, end, _r = _range_args(arg, ctx, fname)
-        return ("vector", _strip(_RANGE_FNS[fname](filt, start, end)))
-    if fname == "mad_over_time":
-        (arg,) = args
-        filt, start, end, r = _range_args(arg, ctx, fname)
-        return ("vector", _strip(promql.mad_over_time(filt, start, end, r)))
-    if fname in _OVER_TIME_FNS:
-        (arg,) = args
-        if arg[0] == "subquery":
-            return _eval_subquery_agg(_OVER_TIME_FNS[fname], arg, ctx)
-        hr = _hist_range_arg(arg, ctx)
-        if hr is not None:
-            # over-time aggregates over a native-histogram range window:
-            # avg/sum stay histogram-valued, count is a float, last the
-            # newest sample (Prometheus native-histogram semantics)
-            filt, start, end = hr
-            return _hist_over_time_result(
-                _OVER_TIME_FNS[fname], fname, filt, start, end, ctx.t)
-        filt, start, end, r = _range_args(arg, ctx, fname)
-        out = promql.over_time(filt, _OVER_TIME_FNS[fname], start, end, r)
-        return ("vector", _strip(out))
-    if fname == "quantile_over_time":
-        q, arg = args
-        qk, qv = _eval(q, ctx)
-        if qk != "scalar":
-            raise PromqlError("quantile_over_time needs a scalar q")
-        filt, start, end, r = _range_args(arg, ctx, fname)
-        return ("vector", _strip(
-            promql.quantile_over_time(filt, qv, start, end, r)))
-    if fname == "absent_over_time":
-        (arg,) = args
-        filt, start, end, r = _range_args(arg, ctx, fname)
-        eq_labels = {l: v for l, op, v in arg[2] if op == "="}
-        if arg[1] is not None:
-            eq_labels[promql.METRIC_NAME_LABEL] = arg[1]
-        out = promql.absent_over_time(filt, start, end, r,
-                                      labels=eq_labels or None)
-        return ("vector", _strip(out))
-    if fname == "absent":
-        (arg,) = args
-        k, v = _eval(arg, ctx)
-        if k != "vector":
-            raise PromqlError("absent takes a vector")
-        return ("vector", _strip(promql.absent(v)))
-    if fname == "holt_winters" or fname == "double_exponential_smoothing":
-        arg, sf, tf = args
-        filt, start, end, _r = _range_args(arg, ctx, fname)
-        sfv, tfv = _eval(sf, ctx)[1], _eval(tf, ctx)[1]
-        return ("vector", _strip(promql.holt_winters(filt, start, end, sfv, tfv)))
-    if fname == "predict_linear":
-        arg, horizon = args
-        filt, start, end, _r = _range_args(arg, ctx, fname)
-        hv = _eval(horizon, ctx)[1]
-        return ("vector", _strip(
-            promql.predict_linear(filt, start, end, int(hv))))
-    if fname in _SCALAR_FNS:
-        (arg,) = args
-        k, v = _eval(arg, ctx)
-        if k == "scalar":
-            import math
-            pyfns = {"abs": abs, "ceil": math.ceil, "floor": math.floor,
-                     "exp": math.exp, "ln": math.log, "log2": math.log2,
-                     "log10": math.log10, "sqrt": math.sqrt,
-                     "sgn": lambda x: float((x > 0) - (x < 0))}
-            return ("scalar", float(pyfns[fname](v)))
-        return ("vector", _drop_name(promql.scalar_map(v, fname)))
-    if fname in _CALENDAR_FNS:
-        if not args:  # minute() etc over time() — evaluate at ctx.t
-            import datetime as _dt
-            ts = _dt.datetime.fromtimestamp(ctx.t, _dt.timezone.utc)
-            vals = {"minute": ts.minute, "hour": ts.hour,
-                    "day_of_week": (ts.weekday() + 1) % 7,
-                    "day_of_month": ts.day,
-                    "day_of_year": ts.timetuple().tm_yday,
-                    "days_in_month": (
-                        (ts.replace(day=28) + _dt.timedelta(days=4)).replace(day=1)
-                        - _dt.timedelta(days=1)).day,
-                    "month": ts.month, "year": ts.year}
-            return ("scalar", float(vals[fname]))
-        (arg,) = args
-        k, v = _eval(arg, ctx)
-        if k != "vector":
-            raise PromqlError(f"{fname} takes a vector (or no argument)")
-        return ("vector", _drop_name(promql.calendar(v, fname)))
-    if fname in ("clamp", "clamp_min", "clamp_max"):
-        arg = args[0]
-        k, v = _eval(arg, ctx)
-        if k != "vector":
-            raise PromqlError(f"{fname} takes a vector first argument")
-        bounds = [float(_eval(a, ctx)[1]) for a in args[1:]]
-        if fname == "clamp":
-            out = promql.clamp(v, lo=bounds[0], hi=bounds[1])
-        elif fname == "clamp_min":
-            out = promql.clamp(v, lo=bounds[0])
-        else:
-            out = promql.clamp(v, hi=bounds[0])
-        return ("vector", _drop_name(out))
-    if fname == "round":
-        # PromQL round(v, to=1): nearest multiple of ``to``, ties away
-        # from the floor (floor(v/to + 0.5) * to — promql/functions.go
-        # funcRound)
-        arg, *rest = args
-        k, v = _eval(arg, ctx)
-        if k != "vector":
-            raise PromqlError("round takes a vector first argument")
-        to = float(_eval(rest[0], ctx)[1]) if rest else 1.0
-        if to <= 0:
-            raise PromqlError("round(): to must be positive")
-        out = v.withColumn(
-            "value", (F.floor(F.col("value") / to + 0.5) * to).cast("double"))
-        return ("vector", _drop_name(out))
-    if fname == "label_replace":
-        arg, dst, repl, src, regex = args
-        v = _eval(arg, ctx)[1]
-        return ("vector", promql.label_replace(
-            v, dst[1], repl[1], src[1], regex[1]))
-    if fname == "label_join":
-        arg, dst, sep, *srcs = args
-        v = _eval(arg, ctx)[1]
-        return ("vector", promql.label_join(
-            v, dst[1], sep[1], [s[1] for s in srcs]))
-    if fname in ("sort", "sort_desc"):
-        (arg,) = args
-        v = _eval(arg, ctx)[1]
-        order = F.col("value").asc() if fname == "sort" else F.col("value").desc()
-        return ("vector", v.orderBy(order))
-    if fname in ("sort_by_label", "sort_by_label_desc"):
-        arg, *labels = args
-        v = promql._ensure_series_key(_eval(arg, ctx)[1])
-        out = promql.sort_by_label(v, [l[1] for l in labels],
-                                   desc=fname.endswith("desc"))
-        return ("vector", _strip(out))
-    if fname == "histogram_quantile":
-        q, arg = args
-        qk, qv = _eval(q, ctx)
-        if qk != "scalar":
-            raise PromqlError("histogram_quantile needs a scalar q")
-        k, v = _eval(arg, ctx)
-        if k == "hvector":
-            # native path: exponential in-bucket interpolation over the
-            # structured sample (incl. rate(h[w]) histogram vectors)
-            from . import native_hist as nh
-
-            return ("vector", _strip(nh.hist_quantile(v, float(qv))))
-        if k != "vector":
-            raise PromqlError("histogram_quantile takes a bucket vector")
-        return ("vector", promql.histogram_quantile_vector(v, qv))
-    if fname == "scalar":
-        # PromQL scalar(): the single sample's value, NaN otherwise.
-        # The collect is bounded by definition — at most 2 rows fetched.
-        (arg,) = args
-        k, v = _eval(arg, ctx)
-        if k == "scalar":
-            return ("scalar", float(v))
-        rows = v.limit(2).collect()
-        return ("scalar",
-                float(rows[0]["value"]) if len(rows) == 1 else float("nan"))
-    if fname == "vector":
-        (arg,) = args
-        k, v = _eval(arg, ctx)
-        if k != "scalar":
-            return ("vector", v)  # vector(vector) is the identity
-        spark = ctx.rel.sparkSession
-        return ("vector", spark.range(1).select(
-            F.map_from_arrays(F.array().cast("array<string>"),
-                              F.array().cast("array<string>")).alias("labels"),
-            F.lit(float(v)).alias("value")))
-    if fname == "time":
-        return ("scalar", float(ctx.t))
-    if fname == "pi":
-        import math
-        return ("scalar", math.pi)
-    if fname == "timestamp":
-        (arg,) = args
-        if arg[0] != "selector" or arg[3] is not None:
-            raise PromqlError("timestamp takes an instant selector")
-        _, nm, ms, _rng, off, at_s = arg
-        filt = _matcher_filter(ctx.rel, nm, ms)
-        base = at_s if at_s is not None else ctx.t
-        vec = promql.instant(filt, base - off, ctx.lookback)
-        return ("vector", _drop_name(
-            vec.select("labels", F.col("ts").cast("double").alias("value"))))
-    if fname == "info":
-        if len(args) not in (1, 2):
-            raise PromqlError("info takes a vector and an optional {…} selector")
-        k, v = _eval(args[0], ctx)
-        if k != "vector":
-            raise PromqlError("info's first argument must be an instant vector")
-        name_ms, data_ms = _info_matchers(args[1] if len(args) == 2 else None)
-        info_rel = _matcher_filter(ctx.rel, None, name_ms + data_ms)
-        info_vec = promql.instant(info_rel, ctx.t, ctx.lookback)
-        out = promql.info_enrich(v, info_vec,
-                                 [m[0] for m in data_ms] or None)
-        return ("vector", _strip(out))
-    raise PromqlError(f"unsupported function {fname!r} in the text front-end")
 
 
 def _info_matchers(sel):
@@ -1059,100 +726,6 @@ def _info_matchers(sel):
     if not name_ms:
         name_ms = [(promql.METRIC_NAME_LABEL, "=", "target_info")]
     return name_ms, data_ms
-
-
-def _hist_over_time_result(fn: str, fname: str, hrel: DataFrame,
-                           start: int, end: int, at_ts: int):
-    """Dispatch one over-time aggregate over a native-histogram window:
-    avg/sum element-wise histograms, count a float vector, last the
-    newest sample (Prometheus native-histogram semantics; every other
-    over-time aggregate is undefined over histograms and raises)."""
-    from . import native_hist as nh
-
-    if fn not in nh.HIST_OVER_TIME:
-        raise PromqlError(
-            f"{fname} is not defined over native-histogram windows "
-            "(supported: avg/sum/count/last/present_over_time)")
-    out = nh.hist_over_time(hrel, start, end, fn).withColumn(
-        "ts", F.lit(int(at_ts)).cast("long"))
-    if fn in ("count", "present"):
-        return ("vector", _strip(out))
-    return ("hvector", out.select("series_key", "labels", "ts", "hist"))
-
-
-def _eval_subquery_agg(fn: str, node, ctx: _Ctx):
-    """``<fn>_over_time(<inner>[r:s])`` → (kind, df).  ``rate(sel[w])`` /
-    ``<g>_over_time(sel[w])`` inners keep their specialized sliding
-    lowerings (rate_sliding / grid_over_time); EVERY other inner shape
-    goes through :func:`_subquery_points` — one fine-grid range
-    evaluation of the arbitrary inner expression, then a single-bucket
-    over_time across its pseudo-samples.  Either way the inner plan runs
-    ONCE, never per step.  Step alignment is absolute (multiples of s),
-    the same documented delta as promql.subquery_over_time.  A
-    HISTOGRAM-valued inner (``avg_over_time(rate(h[5m:1m])[30m:5m])``)
-    routes to :func:`native_hist.hist_over_time` — a second aggregation
-    pass over the same pseudo-samples, avg/sum staying histogram-valued
-    (VERDICT r10 item 6)."""
-    _, inner, range_s, step_s, offset_s, sq_at = node
-    ok = (sq_at is None
-          and inner[0] == "call"
-          and (inner[1] == "rate" or inner[1] in _OVER_TIME_FNS)
-          and len(inner[2]) == 1
-          and inner[2][0][0] == "selector" and inner[2][0][3] is not None)
-    if not ok:
-        # ARBITRARY inner expressions (binops, aggregations, nested
-        # calls): the subquery points come from one fine-grid _reval
-        # pass; the outer aggregate is then a single-bucket over_time on
-        # the pseudo-samples.  No per-step plan replay.
-        kind, pseudo, s_start, s_end = _subquery_points(node, ctx)
-        if kind == "hvector":
-            return _hist_over_time_result(
-                fn, f"{fn}_over_time", pseudo, s_start, s_end, ctx.t)
-        return ("vector", _strip(promql.over_time(pseudo, fn, s_start,
-                                                  s_end, node[2])))
-    _, name, matchers, w, sel_off, at_s = inner[2][0]
-    if at_s is not None:
-        # @ pins the inner selector, so inner(t_i) is the SAME vector at
-        # every subquery step (PromQL @-modifier constancy): evaluate it
-        # ONCE, replicate across the aligned eval points, and run the
-        # ordinary outer aggregate — max/avg/last collapse to the value,
-        # sum/count scale with the point count, exactly as Prometheus
-        # evaluates the degenerate case.
-        k2, vec = _eval(inner, _Ctx(ctx.rel, ctx.t - offset_s, ctx.lookback))
-        if k2 != "vector":
-            raise PromqlError("subquery inner returned a non-vector")
-        s_end = ctx.t - offset_s
-        s_start = s_end - range_s + 1
-        lo = -(-s_start // step_s) * step_s
-        hi = (s_end // step_s) * step_s
-        if hi < lo:
-            return ("vector", _strip(vec.filter(F.lit(False))))
-        spark = ctx.rel.sparkSession
-        grid = spark.range((hi - lo) // step_s + 1).select(
-            (F.lit(lo) + F.col("id") * step_s).cast("long").alias("__sq_t"))
-        pts = promql._ensure_series_key(vec).crossJoin(F.broadcast(grid))
-        agg = promql._OVER_TIME[fn]
-        out = (pts.groupBy("series_key")
-               .agg(F.any_value("labels").alias("labels"),
-                    agg(F.col("value")).alias("value")))
-        return ("vector", _strip(out))
-    filt = _matcher_filter(ctx.rel, name, matchers)
-    end = ctx.t - offset_s - sel_off
-    start = end - range_s + 1
-    if inner[1] == "rate":
-        return ("vector", _strip(
-            promql.subquery_over_time(filt, fn, start, end, w, step_s)))
-    # sliding inner window values at every subquery step, then the outer
-    # per-series aggregate — two shuffles, same as the rate form; eval
-    # points snap to absolute step multiples, matching rate_sliding
-    aligned = -(-start // step_s) * step_s
-    pts = promql.grid_over_time(filt, _OVER_TIME_FNS[inner[1]],
-                                aligned, end, w, step_s)
-    agg = promql._OVER_TIME[fn]
-    out = (pts.groupBy("series_key")
-           .agg(F.any_value("labels").alias("labels"),
-                agg(F.col("value")).alias("value")))
-    return ("vector", _strip(out))
 
 
 def _limit_agg(fname: str, pv: float, v: DataFrame, by, without,
@@ -1184,89 +757,12 @@ def _limit_agg(fname: str, pv: float, v: DataFrame, by, without,
     return v.filter(keep)
 
 
-def _eval_agg(node, ctx: _Ctx):
-    _, fname, by, without, param, arg = node
-    k, v = _eval(arg, ctx)
-    if k == "hvector":
-        # histogram aggregation: sum / avg (element-wise bucket merge,
-        # avg = sum / n) are the defined operations; Prometheus likewise
-        # drops histograms from the other aggregators.  Instant vectors
-        # carry each series' RAW sample ts, which must not split the
-        # merge groups — re-stamp to the eval time first (same contract
-        # as _hist_binop).
-        if fname not in ("sum", "avg") or without is not None:
-            raise PromqlError(
-                f"{fname}{' without' if without is not None else ''} is not "
-                "defined over native-histogram vectors (only sum/avg by)")
-        from . import native_hist as nh
-
-        v = v.withColumn("ts", F.lit(ctx.t).cast("long"))
-        return ("hvector", nh.hist_sum_by(v, list(by or []),
-                                          mean=(fname == "avg")))
-    if k != "vector":
-        raise PromqlError(f"{fname} aggregates a vector")
-    if fname in ("topk", "bottomk"):
-        # PromQL selects k series PER GROUP when by/without is given;
-        # plain topk/bottomk is the single global group
-        kv = int(_eval(param, ctx)[1])
-        if by or without:
-            from pyspark.sql.window import Window as W
-
-            key = promql.canonical_labels_json(
-                promql.match_labels(F.col("labels"),
-                                    list(by) if by else None,
-                                    list(without) if without else None))
-            order = (F.col("value").desc() if fname == "topk"
-                     else F.col("value").asc())
-            tie = promql.canonical_labels_json(F.col("labels"))
-            w = W.partitionBy(key).orderBy(order, tie)
-            return ("vector", v.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") <= kv).drop("__rn")
-                    .select("labels", "value"))
-        vec = promql._ensure_series_key(v)
-        return ("vector", _strip(
-            promql.topk(vec, kv, largest=(fname == "topk"))))
-    if fname in ("limitk", "limit_ratio"):
-        out = _limit_agg(fname, float(_eval(param, ctx)[1]), v, by, without)
-        return ("vector", out.select("labels", "value"))
-    if fname == "quantile":
-        q = float(_eval(param, ctx)[1])
-        if without is not None:
-            # group key = canonical JSON of the retained label subset,
-            # same lowering as agg_without.  Groups are series-cardinality
-            # sized (unbounded at scale), so the quantile runs on the
-            # grouped rank-probe engine — bit-identical to percentile()
-            # without buffering a whole group on one reducer.
-            kept = promql.match_labels(F.col("labels"), None, list(without))
-            keyed = v.select(kept.alias("__kl"), "value").withColumn(
-                "__gk", promql.canonical_labels_json(F.col("__kl")))
-            out = _sketch.grouped_quantile_cont(
-                keyed, ["__gk"], "value", q, carry=("__kl",))
-            return ("vector",
-                    out.select(F.col("__kl").alias("labels"), "value"))
-        return ("vector", promql.agg_quantile_by(v, q, by or []))
-    if fname == "count_values":
-        if param[0] != "str":
-            raise PromqlError('count_values takes ("label", vector)')
-        out = promql.count_values(v, param[1])
-        # PromQL's result vector carries the series count as the value.
-        return ("vector", out.select(
-            "labels", F.col("n_series").cast("double").alias("value")))
-    if without is not None:
-        return ("vector", promql.agg_without(v, fname, without))
-    return ("vector", promql.agg_by(v, fname, by or []))
-
-
-def _hist_binop(op, lk, lv, rk, rv, m, eval_ts: int | None = None):
+def _hist_binop(op, lk, lv, rk, rv, m):
     """Binary operators with a histogram side (PromQL histogram
     arithmetic): h * scalar / h / scalar scale every component;
     h + h / h - h merge element-wise with one-to-one matching on the
-    full label sets (metric name dropped).  Everything else is
-    undefined over histograms, as in Prometheus.  ``eval_ts`` (instant
-    mode) re-stamps both sides to the evaluation time before matching —
-    instant vectors carry their samples' raw timestamps, which must not
-    participate in the match; range vectors (eval_ts=None) match per
-    grid point."""
+    full label sets (metric name dropped) per grid point.  Everything
+    else is undefined over histograms, as in Prometheus."""
     from . import native_hist as nh
 
     if m.get("on") or m.get("ignoring") or m.get("group"):
@@ -1275,10 +771,6 @@ def _hist_binop(op, lk, lv, rk, rv, m, eval_ts: int | None = None):
     if lk == "hvector" and rk == "hvector":
         if op not in ("+", "-"):
             raise PromqlError(f"{op} is not defined between two histograms")
-        if eval_ts is not None:
-            stamp = F.lit(int(eval_ts)).cast("long")
-            lv = lv.withColumn("ts", stamp)
-            rv = rv.withColumn("ts", stamp)
         return ("hvector", nh.hist_add(lv, rv, subtract=(op == "-")))
     vec, scalar, swapped = (lv, rv, False) if lk == "hvector" else (rv, lv, True)
     if (rk if lk == "hvector" else lk) != "scalar":
@@ -1302,176 +794,6 @@ def _hist_binop(op, lk, lv, rk, rv, m, eval_ts: int | None = None):
     return ("hvector", _drop_name(out))
 
 
-def _eval_binop(node, ctx: _Ctx):
-    _, op, ln, rn, matching = node
-    m = dict(matching or {})
-    bool_mode = m.pop("bool", False)
-    lk, lv = _eval(ln, ctx)
-    rk, rv = _eval(rn, ctx)
-    if "hvector" in (lk, rk):
-        return _hist_binop(op, lk, lv, rk, rv, m, eval_ts=ctx.t)
-
-    if lk == "scalar" and rk == "scalar":
-        import math
-
-        # IEEE-754 semantics like Go's math package (PromQL's scalar
-        # engine): x/0 = ±Inf, 0/0 = NaN, fmod(x, 0) = NaN, pow
-        # overflow = Inf — Python's operators raise instead.
-        def _fdiv(a, b):
-            if b != 0:
-                return a / b
-            if a == 0 or math.isnan(a):
-                return math.nan
-            return math.copysign(math.inf, a) * math.copysign(1.0, b)
-
-        def _fmod(a, b):
-            try:
-                return math.fmod(a, b)
-            except ValueError:
-                return math.nan
-
-        def _fpow(a, b):
-            if a == 0 and b < 0:
-                # IEEE pow: -Inf only for a NEGATIVE-zero base raised to a
-                # negative odd integer (Go math.Pow); +Inf otherwise.
-                if (math.copysign(1.0, a) < 0 and math.isfinite(b)
-                        and b == int(b) and int(b) % 2 != 0):
-                    return -math.inf
-                return math.inf
-            try:
-                return math.pow(a, b)
-            except OverflowError:
-                return math.inf
-            except ValueError:
-                return math.nan
-
-        fns = {"+": lambda a, b: a + b, "-": lambda a, b: a - b,
-               "*": lambda a, b: a * b, "/": _fdiv,
-               "%": _fmod, "^": _fpow}
-        if op in fns:
-            return ("scalar", float(fns[op](lv, rv)))
-        cmps = {"==": lv == rv, "!=": lv != rv, ">": lv > rv,
-                "<": lv < rv, ">=": lv >= rv, "<=": lv <= rv}
-        return ("scalar", 1.0 if cmps[op] else 0.0)
-
-    if op in _SET:
-        if lk != "vector" or rk != "vector":
-            raise PromqlError(f"{op} needs two vectors")
-        lvec = promql._ensure_series_key(lv)
-        rvec = promql._ensure_series_key(rv)
-        out = promql.set_binop(lvec, rvec, op,
-                               on=m.get("on"), ignoring=m.get("ignoring"))
-        return ("vector", _strip(out))
-
-    if lk == "vector" and rk == "vector":
-        out = promql.binop(lv, rv, op, on=m.get("on"),
-                           ignoring=m.get("ignoring"), group=m.get("group"),
-                           include=m.get("include"), bool_mode=bool_mode)
-        return ("vector", _strip(out))
-
-    # scalar ∘ vector (promql/engine.go VectorscalarBinop)
-    vec, scalar, swapped = (lv, rv, False) if lk == "vector" else (rv, lv, True)
-    s = F.lit(float(scalar))
-    val = F.col("value")
-    lhs, rhs = (val, s) if not swapped else (s, val)
-    if op in promql._ARITH_OPS:
-        out = vec.withColumn("value",
-                             promql._ARITH_OPS[op](lhs, rhs).cast("double"))
-        return ("vector", _drop_name(out))
-    cond = promql._CMP_OPS[op](lhs, rhs)
-    if bool_mode:
-        out = _drop_name(vec.withColumn(
-            "value", F.when(cond, 1.0).otherwise(0.0)))
-    else:
-        out = vec.filter(cond)  # filter keeps the metric name, as PromQL does
-    return ("vector", out)
-
-
-def eval_instant(rel: DataFrame, query, at_ts: int,
-                 lookback: int = 300,
-                 hist_rel: DataFrame | None = None,
-                 hist_metrics: "set[str] | None" = None) -> DataFrame:
-    """Evaluate ``query`` (text, or a pre-parsed AST) as a PromQL instant
-    query at ``at_ts`` over a relation with (labels map, ts, value)
-    columns.  Returns the result vector as (labels, value); a scalar
-    result becomes a single labels-less row; a TOP-LEVEL range selector
-    or subquery returns the Prometheus "matrix" result type as
-    (labels, ts, value) rows — (labels, ts, hist) when histogram-valued.
-
-    ``hist_rel`` (labels, ts, hist) enables NATIVE-HISTOGRAM selectors:
-    metric names present in it resolve to structured histogram samples,
-    so ``histogram_quantile(0.9, rate(h[5m]))``,
-    ``histogram_count/sum/avg/stddev/stdvar`` and ``histogram_fraction``
-    evaluate on the native path (functions/native_hist.py).  A TOP-LEVEL
-    histogram result returns (labels, ts, hist) rows instead of a value
-    column — the structured sample IS the result, as in the Prometheus
-    HTTP API's histogram payloads."""
-    node = parse(query) if isinstance(query, str) else query
-    node = resolve_at(node, at_ts, at_ts)
-    ctx = _Ctx(rel, at_ts, lookback, hist_rel=hist_rel,
-               hist_metrics=hist_metrics)
-    # TOP-LEVEL matrix results (VERDICT r10 item 6): a bare range
-    # selector returns the raw samples in (t−range, t]; a bare subquery
-    # returns its aligned pseudo-samples — Prometheus result type
-    # "matrix", as (labels, ts, value|hist) rows.  Handled here, before
-    # _eval, so every INNER position keeps its pointed type error.
-    if node[0] == "selector" and node[3] is not None:
-        _, name, matchers, range_s, offset_s, at_s = node
-        end = (at_s if at_s is not None else at_ts) - offset_s
-        start = end - range_s + 1
-        if name is not None and name in ctx.hist_metrics:
-            hfilt = _matcher_filter(ctx.hist_rel, name, matchers)
-            return hfilt.filter(F.col("ts").between(start, end)).select(
-                "labels", F.col("ts").cast("long").alias("ts"), "hist")
-        filt = _matcher_filter(rel, name, matchers)
-        return filt.filter(F.col("ts").between(start, end)).select(
-            "labels", F.col("ts").cast("long").alias("ts"), "value")
-    if node[0] == "subquery":
-        k2, pseudo, _s, _e = _subquery_points(node, ctx)
-        val = "hist" if k2 == "hvector" else "value"
-        return pseudo.select(
-            "labels", F.col("ts").cast("long").alias("ts"), val)
-    k, v = _eval(node, ctx)
-    if k == "hvector":
-        return v.select("labels", "ts", "hist")
-    if k == "scalar":
-        spark = rel.sparkSession
-        return spark.range(1).select(
-            F.map_from_arrays(F.array().cast("array<string>"),
-                              F.array().cast("array<string>")).alias("labels"),
-            F.lit(float(v)).alias("value"),
-        )
-    return v.select("labels", F.col("value").cast("double").alias("value"))
-
-
-# ------------------------------------------------------------- range queries
-# Prometheus query_range: the expression evaluated at EVERY grid point
-# t = start + k·step.  Vectors here are (labels, ts, value) frames — one
-# row per series per eval point — produced by the grid_* primitives in
-# functions/promql.py (explode-to-covering-points + hash agg; no per-step
-# loop, no whole-series window).  Aggregations group by (labels, ts);
-# binary operators match on (label-key, ts).
-
-#: call forms with a distributed grid lowering (grid_rate modes)
-_RANGE_MODES = {k: k for k in (
-    "rate", "increase", "delta", "irate", "idelta", "changes", "resets")}
-
-
-class _RCtx:
-    def __init__(self, rel: DataFrame, start: int, end: int, step: int,
-                 lookback: int, hist_rel: DataFrame | None = None,
-                 hist_metrics: "set[str] | None" = None) -> None:
-        self.rel = rel
-        self.start, self.end, self.step = int(start), int(end), int(step)
-        self.lookback = int(lookback)
-        self.hist_rel = hist_rel
-        self._hist_metrics: set[str] | None = hist_metrics
-
-    # same lazy metric-name routing set as _Ctx (one bounded collect per
-    # query, only when a hist relation is configured)
-    hist_metrics = _Ctx.hist_metrics
-
-
 def _strip_r(df: DataFrame) -> DataFrame:
     return df.select("labels", F.col("ts").cast("long").alias("ts"),
                      F.col("value").cast("double").alias("value"))
@@ -1487,18 +809,37 @@ def _shift_h(df: DataFrame, offset_s: int) -> DataFrame:
     return _shift(df, offset_s).select("series_key", "labels", "ts", "hist")
 
 
-def _grid_df(ctx: _RCtx):
-    """The eval-point grid as a (ts) frame — generated, never a scan."""
-    spark = ctx.rel.sparkSession
-    n = (ctx.end - ctx.start) // ctx.step + 1
-    return spark.range(n).select(
-        (F.lit(ctx.start) + F.col("id") * ctx.step).cast("long").alias("ts"))
+def _unpin(node):
+    """``node`` without its ``@`` modifier."""
+    return node[:5] + (None,)
+
+
+def _pinned(node, at_s: int, ctx: _RCtx):
+    """``node`` (its ``@`` already stripped) evaluated ONCE on the
+    one-point grid at the pinned time, then held constant across ``ctx``'s
+    grid (PromQL @-modifier semantics) by a broadcast cross join to the
+    eval points."""
+    k, v = _reval(node, ctx.at(at_s))
+    grid = F.broadcast(ctx.grid())
+    if k == "hvector":
+        return "hvector", v.drop("ts").crossJoin(grid)
+    return "vector", v.select("labels", "value").crossJoin(grid) \
+        .select("labels", "ts", "value")
+
+
+def _scalar_arg(node, ctx: _RCtx, what: str) -> float:
+    """A function/aggregation parameter that must be a plain scalar."""
+    k, v = _reval(node, ctx)
+    if k != "scalar":
+        raise PromqlError(f"{what} needs a scalar parameter")
+    return float(v)
 
 
 def _reval(node, ctx: _RCtx):
     """Returns ('scalar', float) | ('vector', df(labels, ts, value)) |
-    ('stepscalar', df(ts, value)) — the last is a per-eval-point scalar
-    (time() and friends), PromQL's scalar-that-varies-with-t."""
+    ('hvector', df(series_key, labels, ts, hist)) | ('stepscalar',
+    df(ts, value)) — the last is a per-eval-point scalar (time() and
+    friends), PromQL's scalar-that-varies-with-t."""
     kind = node[0]
     if kind == "num":
         return ("scalar", node[1])
@@ -1516,34 +857,19 @@ def _reval(node, ctx: _RCtx):
         if range_s is not None:
             raise PromqlError(
                 f"range selector {name or ''}[{range_s}s] outside a range function")
+        if at_s is not None:
+            return _pinned(_unpin(node), at_s, ctx)
         if name is not None and name in ctx.hist_metrics:
             from . import native_hist as nh
 
             hfilt = _matcher_filter(ctx.hist_rel, name, matchers)
-            if at_s is not None:
-                vec = nh.hist_instant(hfilt, at_s - offset_s, ctx.lookback)
-                return ("hvector",
-                        vec.drop("ts").crossJoin(F.broadcast(_grid_df(ctx)))
-                        .select("series_key", "labels", "ts", "hist"))
-            _guard_fanout(ctx.lookback, ctx.step, f"selector {name}")
+            _guard_fanout(ctx.lookback, ctx, f"selector {name}")
             out = nh.grid_hist_instant(hfilt, ctx.start - offset_s,
                                        ctx.end - offset_s, ctx.step,
                                        ctx.lookback)
             return ("hvector", _shift_h(out, offset_s))
         filt = _matcher_filter(ctx.rel, name, matchers)
-        if at_s is not None:
-            # @-fixed selector: constant across the grid (PromQL) — one
-            # instant evaluation broadcast-cross-joined to the eval points
-            vec = _strip(promql.instant(filt, at_s - offset_s, ctx.lookback))
-            spark = ctx.rel.sparkSession
-            n = (ctx.end - ctx.start) // ctx.step + 1
-            grid = spark.range(n).select(
-                (F.lit(ctx.start) + F.col("id") * ctx.step)
-                .cast("long").alias("ts"))
-            from pyspark.sql.functions import broadcast
-            return ("vector", vec.crossJoin(broadcast(grid))
-                    .select("labels", "ts", "value"))
-        _guard_fanout(ctx.lookback, ctx.step, f"selector {name or ''}")
+        _guard_fanout(ctx.lookback, ctx, f"selector {name or ''}")
         out = promql.grid_instant(filt, ctx.start - offset_s,
                                   ctx.end - offset_s, ctx.step, ctx.lookback)
         return ("vector", _strip_r(_shift(out, offset_s)))
@@ -1555,45 +881,39 @@ def _reval(node, ctx: _RCtx):
         return _reval_binop(node, ctx)
     if kind == "subquery":
         raise PromqlError(
-            "a subquery at the top level of a range query is invalid "
-            "(range-vector result — as in Prometheus; run it as an "
-            "INSTANT query for the matrix result)")
-    raise PromqlError(f"{kind} expressions are not supported in range queries")
+            "a subquery at the top level of a range query is invalid, as in "
+            "any vector position (range-vector result — as in Prometheus; "
+            "an INSTANT query returns a top-level subquery as a matrix)")
+    raise PromqlError(f"unhandled node {kind}")
 
 
-def _guard_fanout(reach_incl: int, step: int, what: str) -> None:
-    """Range-mode fan-out cap (promql.GRID_FANOUT_CAP) as a PromqlError —
-    the dashboard-facing form of promql._check_fanout."""
+def _guard_fanout(reach_incl: int, ctx: _RCtx, what: str) -> None:
+    """Grid fan-out cap (promql.GRID_FANOUT_CAP) as a PromqlError — the
+    query-facing form of promql._check_fanout."""
     try:
-        promql._check_fanout(reach_incl, step, what)
+        promql._check_fanout(reach_incl, ctx.start, ctx.end, ctx.step, what)
     except ValueError as e:
         raise PromqlError(str(e)) from None
 
 
 def _rsub_points(node, ctx: _RCtx):
-    """Range-mode subquery inner evaluated ONCE on the aligned fine grid
-    covering every outer window — its rows are pseudo-samples the grid
-    primitives consume unchanged, so ``rate(expr[r:s])`` /
-    ``<fn>_over_time(expr[r:s])`` in range queries cost one inner range
+    """Subquery inner evaluated ONCE on the aligned fine grid (absolute
+    multiples of the subquery step) covering every outer window — its
+    rows are pseudo-samples the grid primitives consume unchanged, so
+    ``rate(expr[r:s])`` / ``<fn>_over_time(expr[r:s])`` cost one inner
     evaluation plus the normal grid pass, never a per-outer-point replay
-    of the inner plan.  Returns (kind, pseudo, range_s, offset_s); kind
+    of the inner plan.  The caller has stripped any ``@`` (see
+    :func:`_pinned`).  Returns (kind, pseudo, range_s, offset_s); kind
     "hvector" carries histogram pseudo-samples for the counter-math
     callers."""
-    _, inner, range_s, step_s, offset_s, sq_at = node
-    if sq_at is not None:
-        raise PromqlError(
-            "@-fixed subqueries reach _rsub_points only through a bug — "
-            "callers must broadcast the constant instant result")
+    _, inner, range_s, step_s, offset_s, _at = node
     lo = -(-(ctx.start - offset_s - range_s + 1) // step_s) * step_s
     hi = ((ctx.end - offset_s) // step_s) * step_s
-    spark = ctx.rel.sparkSession
     if hi < lo:
-        return ("vector", spark.createDataFrame(
+        return ("vector", ctx.rel.sparkSession.createDataFrame(
             [], "labels map<string,string>, ts long, value double"),
             range_s, offset_s)
-    k, v = _reval(inner, _RCtx(ctx.rel, lo, hi, step_s, ctx.lookback,
-                               hist_rel=ctx.hist_rel,
-                               hist_metrics=ctx._hist_metrics))
+    k, v = _reval(inner, ctx.sub(lo, hi, step_s))
     if k == "hvector":
         return "hvector", v.select("labels", "ts", "hist"), range_s, offset_s
     if k != "vector":
@@ -1609,24 +929,42 @@ def _rrange_sel(node, ctx: _RCtx, fname: str):
                 f"{fname} over a histogram-valued subquery is not defined "
                 "(histogram subqueries support rate/increase/delta)")
         return pseudo, range_s, offset_s
-    _, name, matchers, range_s, offset_s, at_s = node
-    if at_s is not None:
-        raise PromqlError(
-            "@-fixed range selectors are not supported in range queries")
+    if node[0] != "selector" or node[3] is None:
+        raise PromqlError(f"{fname} needs a range selector argument")
+    _, name, matchers, range_s, offset_s, _at = node
     return _matcher_filter(ctx.rel, name, matchers), range_s, offset_s
+
+
+def _pinned_arg(fname: str, args):
+    """Index of a call's @-pinned data argument — a range selector or a
+    subquery carrying ``@`` (or timestamp()'s instant selector) — else
+    None."""
+    for i, a in enumerate(args):
+        if (isinstance(a, tuple) and a[0] in ("selector", "subquery")
+                and a[5] is not None
+                and (a[0] == "subquery" or a[3] is not None
+                     or fname == "timestamp")):
+            return i
+    return None
 
 
 def _reval_call(node, ctx: _RCtx):
     _, fname, args = node
+    i = _pinned_arg(fname, args)
+    if i is not None:
+        # rate(x[5m] @ t), max_over_time(expr[r:s] @ t), timestamp(x @ t)
+        # (incl. the resolved @ start()/end() sugar): one evaluation at
+        # the pinned time, constant across the grid
+        unpinned = args[:i] + [_unpin(args[i])] + args[i + 1:]
+        return _pinned(("call", fname, unpinned), args[i][5], ctx)
     if fname in ("rate", "increase", "delta") and len(args) == 1 \
-            and args[0][0] == "subquery" and args[0][5] is None:
+            and args[0][0] == "subquery":
         # rate(h[r:s]) on the grid: histogram pseudo-samples from ONE
         # inner grid pass feed grid_hist_rate's step frames; float
         # inners take the same pseudo relation into the float grid
-        # lowering — either way the inner plan runs once.  (@-fixed
-        # subqueries are grid-constant: the broadcast path below.)
+        # lowering — either way the inner plan runs once.
         kind, pseudo, range_s, offset_s = _rsub_points(args[0], ctx)
-        _guard_fanout(range_s - 1, ctx.step, fname)
+        _guard_fanout(range_s - 1, ctx, fname)
         if kind == "hvector":
             from . import native_hist as nh
 
@@ -1644,18 +982,9 @@ def _reval_call(node, ctx: _RCtx):
         # native-histogram counter math on the grid (histogram-valued)
         from . import native_hist as nh
 
-        _, name, matchers, range_s, offset_s, at_s = args[0]
+        _, name, matchers, range_s, offset_s, _at = args[0]
         hfilt = _matcher_filter(ctx.hist_rel, name, matchers)
-        fn = {"rate": nh.hist_rate, "increase": nh.hist_increase,
-              "delta": nh.hist_delta}[fname]
-        if at_s is not None:
-            # @-fixed: constant across the grid, one whole-range eval
-            end = at_s - offset_s
-            out = fn(hfilt, end - range_s + 1, end).drop("ts")
-            return ("hvector",
-                    out.crossJoin(F.broadcast(_grid_df(ctx)))
-                    .select("series_key", "labels", "ts", "hist"))
-        _guard_fanout(range_s - 1, ctx.step, fname)
+        _guard_fanout(range_s - 1, ctx, fname)
         out = nh.grid_hist_rate(hfilt, ctx.start - offset_s,
                                 ctx.end - offset_s, range_s, ctx.step, fname)
         return ("hvector", _shift_h(out, offset_s))
@@ -1664,62 +993,36 @@ def _reval_call(node, ctx: _RCtx):
         k, v = _reval(arg, ctx)
         if k != "hvector":
             raise PromqlError(
-                f"{fname} takes a native-histogram vector (got {k})")
+                f"{fname} takes a native-histogram vector (got {k}; classic "
+                "le-bucket series have no structured sample to read)")
         from . import native_hist as nh
 
         return ("vector",
                 _strip_r(_drop_name(nh.hist_scalar(v, _HIST_SCALAR_FNS[fname]))))
     if fname == "histogram_fraction":
         lo, hi, arg = args
-        lov, hiv = _reval(lo, ctx), _reval(hi, ctx)
-        if lov[0] != "scalar" or hiv[0] != "scalar":
-            raise PromqlError("histogram_fraction needs scalar bounds")
+        lov = _scalar_arg(lo, ctx, fname)
+        hiv = _scalar_arg(hi, ctx, fname)
         k, v = _reval(arg, ctx)
         if k != "hvector":
             raise PromqlError("histogram_fraction takes a native-histogram vector")
         from . import native_hist as nh
 
-        return ("vector", _strip_r(_drop_name(
-            nh.hist_fraction(v, float(lov[1]), float(hiv[1])))))
-    if fname in _RANGE_MODES or fname in _OVER_TIME_FNS \
-            or fname == "quantile_over_time":
-        # @-fixed range selector (rate(x[5m] @ 1700000000), incl. the
-        # resolved @ start()/end() sugar): PromQL evaluates the call once
-        # at the fixed time and holds it constant across the grid — one
-        # instant-mode evaluation broadcast-cross-joined to the eval
-        # points, exactly like the @-fixed instant selector path.
-        sel = args[-1]
-        at_fixed = (
-            (sel[0] == "selector" and sel[3] is not None)
-            or sel[0] == "subquery"
-        ) and sel[5] is not None
-        if at_fixed:
-            k, vec = _eval(node, _Ctx(ctx.rel, ctx.end, ctx.lookback,
-                                      hist_rel=ctx.hist_rel,
-                                      hist_metrics=ctx._hist_metrics))
-            if k == "hvector":
-                return ("hvector",
-                        vec.drop("ts").crossJoin(F.broadcast(_grid_df(ctx)))
-                        .select("series_key", "labels", "ts", "hist"))
-            if k != "vector":
-                raise PromqlError(f"{fname} returned a non-vector")
-            return ("vector",
-                    _strip(vec).crossJoin(F.broadcast(_grid_df(ctx)))
-                    .select("labels", "ts", "value"))
+        return ("vector", _strip_r(_drop_name(nh.hist_fraction(v, lov, hiv))))
     if fname in _RANGE_MODES:
         (arg,) = args
         filt, w, off = _rrange_sel(arg, ctx, fname)
-        _guard_fanout(w - 1, ctx.step, fname)
+        _guard_fanout(w - 1, ctx, fname)
         out = promql.grid_rate(filt, ctx.start - off, ctx.end - off,
                                w, ctx.step, _RANGE_MODES[fname])
         return ("vector", _strip_r(_shift(out, off)))
     if fname in _OVER_TIME_FNS:
         (arg,) = args
         fn = _OVER_TIME_FNS[fname]
-        # histogram-valued windows (VERDICT r10 item 6): a subquery whose
-        # inner is histogram-valued, or a native-histogram range selector
-        # — avg/sum stay histogram-valued on the grid, count is a float,
-        # last the newest sample per eval window
+        # histogram-valued windows: a subquery whose inner is
+        # histogram-valued, or a native-histogram range selector — avg/sum
+        # stay histogram-valued on the grid, count is a float, last the
+        # newest sample per eval window
         hsub = None
         if arg[0] == "subquery":
             kind, pseudo, w, off = _rsub_points(arg, ctx)
@@ -1728,8 +1031,7 @@ def _reval_call(node, ctx: _RCtx):
             else:
                 filt = pseudo
         elif (arg[0] == "selector" and arg[3] is not None
-              and arg[1] is not None and arg[1] in ctx.hist_metrics
-              and arg[5] is None):
+              and arg[1] is not None and arg[1] in ctx.hist_metrics):
             _, hname, hmatchers, w, off, _at = arg
             hsub = _matcher_filter(ctx.hist_rel, hname, hmatchers)
         else:
@@ -1741,13 +1043,14 @@ def _reval_call(node, ctx: _RCtx):
                 raise PromqlError(
                     f"{fname} is not defined over native-histogram windows "
                     "(supported: avg/sum/count/last/present_over_time)")
-            _guard_fanout(w - 1, ctx.step, fname)
+            _guard_fanout(w - 1, ctx, fname)
             out = nh.grid_hist_over_time(hsub, ctx.start - off,
                                          ctx.end - off, w, ctx.step, fn)
             if fn in ("count", "present"):
                 return ("vector", _strip_r(_shift(out, off)))
             return ("hvector", _shift_h(out, off))
-        if (w - 1) // ctx.step + 1 > promql.GRID_FANOUT_CAP:
+        if promql._fanout(w - 1, ctx.start, ctx.end, ctx.step) \
+                > promql.GRID_FANOUT_CAP:
             # window ≫ step: auto-route invertible aggregates to the
             # running-sum sliding lowering (O(grid) per series, no
             # explode factor); everything else fails fast with the
@@ -1756,99 +1059,86 @@ def _reval_call(node, ctx: _RCtx):
                 out = promql.grid_over_time_sliding(
                     filt, fn, ctx.start - off, ctx.end - off, w, ctx.step)
                 return ("vector", _strip_r(_shift(out, off)))
-            _guard_fanout(w - 1, ctx.step, fname)
+            _guard_fanout(w - 1, ctx, fname)
         out = promql.grid_over_time(filt, fn,
                                     ctx.start - off, ctx.end - off, w, ctx.step)
         return ("vector", _strip_r(_shift(out, off)))
     if fname == "quantile_over_time":
         q, arg = args
-        qk, qv = _reval(q, ctx)
-        if qk != "scalar":
-            raise PromqlError("quantile_over_time needs a scalar q")
+        qv = _scalar_arg(q, ctx, fname)
         filt, w, off = _rrange_sel(arg, ctx, fname)
-        _guard_fanout(w - 1, ctx.step, fname)
+        _guard_fanout(w - 1, ctx, fname)
         out = promql.grid_over_time(filt, "quantile", ctx.start - off,
                                     ctx.end - off, w, ctx.step, q=qv)
         return ("vector", _strip_r(_shift(out, off)))
     if fname == "mad_over_time":
         (arg,) = args
         filt, w, off = _rrange_sel(arg, ctx, fname)
-        _guard_fanout(w - 1, ctx.step, fname)
+        _guard_fanout(w - 1, ctx, fname)
         out = promql.grid_mad(filt, ctx.start - off, ctx.end - off,
                               w, ctx.step)
         return ("vector", _strip_r(_shift(out, off)))
     if fname in ("holt_winters", "double_exponential_smoothing"):
         arg, sfp, tfp = args
-        sfk, sfv = _reval(sfp, ctx)
-        tfk, tfv = _reval(tfp, ctx)
-        if sfk != "scalar" or tfk != "scalar":
-            raise PromqlError("holt_winters needs scalar sf and tf")
+        sfv = _scalar_arg(sfp, ctx, fname)
+        tfv = _scalar_arg(tfp, ctx, fname)
         filt, w, off = _rrange_sel(arg, ctx, fname)
-        _guard_fanout(w - 1, ctx.step, fname)
+        _guard_fanout(w - 1, ctx, fname)
         out = promql.grid_holt_winters(filt, ctx.start - off, ctx.end - off,
-                                       w, ctx.step, float(sfv), float(tfv))
+                                       w, ctx.step, sfv, tfv)
         return ("vector", _strip_r(_shift(out, off)))
     if fname in ("deriv", "predict_linear"):
         horizon = None
         if fname == "predict_linear":
             arg, hp = args
-            hk, hv = _reval(hp, ctx)
-            if hk != "scalar":
-                raise PromqlError("predict_linear needs a scalar horizon")
-            horizon = int(hv)
+            horizon = int(_scalar_arg(hp, ctx, fname))
         else:
             (arg,) = args
         filt, w, off = _rrange_sel(arg, ctx, fname)
-        _guard_fanout(w - 1, ctx.step, fname)
+        _guard_fanout(w - 1, ctx, fname)
         out = promql.grid_deriv(filt, ctx.start - off, ctx.end - off, w,
                                 ctx.step, horizon)
         return ("vector", _strip_r(_shift(out, off)))
     if fname == "histogram_quantile":
         q, arg = args
-        qk, qv = _reval(q, ctx)
-        if qk != "scalar":
-            raise PromqlError("histogram_quantile needs a scalar q")
+        qv = _scalar_arg(q, ctx, fname)
         k, v = _reval(arg, ctx)
         if k == "hvector":
+            # native path: exponential in-bucket interpolation over the
+            # structured sample (incl. rate(h[w]) histogram vectors)
             from . import native_hist as nh
 
-            return ("vector", _strip_r(nh.hist_quantile(v, float(qv))))
+            return ("vector", _strip_r(nh.hist_quantile(v, qv)))
         if k != "vector":
             raise PromqlError("histogram_quantile takes a bucket vector")
         return ("vector", promql.histogram_quantile_vector(
             v, qv, extra_keys=("ts",)))
     if fname == "time":
-        grid = _grid_df(ctx)
-        return ("stepscalar",
-                grid.select("ts", F.col("ts").cast("double").alias("value")))
+        return ("stepscalar", ctx.grid().select(
+            "ts", F.col("ts").cast("double").alias("value")))
     if fname == "pi":
-        import math
         return ("scalar", math.pi)
     if fname in _SCALAR_FNS:
         (arg,) = args
         k, v = _reval(arg, ctx)
         if k == "scalar":
-            return _eval_call(node, _Ctx(ctx.rel, ctx.end, ctx.lookback))
+            return ("scalar", _scalar_math(fname, v))
         if k == "stepscalar":
             return ("stepscalar", promql.scalar_map(v, fname))
         return ("vector", _drop_name(promql.scalar_map(v, fname)))
     if fname in _CALENDAR_FNS:
-        (arg,) = args if args else (None,)
-        if arg is None:  # minute() etc == fn(time()): per-eval-point scalar
-            grid = _grid_df(ctx)
-            ss = grid.select("ts", F.col("ts").cast("double").alias("value"))
-            return ("stepscalar", promql.calendar(ss, fname))
-        k, v = _reval(arg, ctx)
+        (arg,) = args if args else (("call", "time", []),)
+        k, v = _reval(arg, ctx)  # minute() etc == minute(time())
         if k == "stepscalar":
             return ("stepscalar", promql.calendar(v, fname))
         if k != "vector":
-            raise PromqlError(f"{fname} takes a vector")
+            raise PromqlError(f"{fname} takes a vector (or no argument)")
         return ("vector", _drop_name(promql.calendar(v, fname)))
     if fname in ("clamp", "clamp_min", "clamp_max"):
         k, v = _reval(args[0], ctx)
         if k != "vector":
             raise PromqlError(f"{fname} takes a vector first argument")
-        bounds = [float(_reval(a, ctx)[1]) for a in args[1:]]
+        bounds = [_scalar_arg(a, ctx, fname) for a in args[1:]]
         if fname == "clamp":
             out = promql.clamp(v, lo=bounds[0], hi=bounds[1])
         elif fname == "clamp_min":
@@ -1866,7 +1156,7 @@ def _reval_call(node, ctx: _RCtx):
         return ("vector", promql.label_join(v, dst[1], sep[1], [s[1] for s in srcs]))
     if fname == "timestamp":
         (arg,) = args
-        if arg[0] != "selector" or arg[3] is not None or arg[5] is not None:
+        if arg[0] != "selector" or arg[3] is not None:
             raise PromqlError("timestamp takes an instant selector")
         off = arg[4]
         filt = _matcher_filter(ctx.rel, arg[1], arg[2])
@@ -1876,9 +1166,9 @@ def _reval_call(node, ctx: _RCtx):
             ctx.start - off, ctx.end - off, ctx.step, ctx.lookback)
         return ("vector", _drop_name(_strip_r(_shift(out, off))))
     if fname in ("absent", "absent_over_time"):
-        # one {absent: true} row per grid point where the argument yields
-        # NO samples: generated grid anti-joined against present points —
-        # the grid side never scans data
+        # one sample per grid point where the argument yields NO samples:
+        # generated grid anti-joined against present points — the grid
+        # side never scans data
         (arg,) = args
         if fname == "absent":
             k, v = _reval(arg, ctx)
@@ -1891,26 +1181,18 @@ def _reval_call(node, ctx: _RCtx):
                 promql.grid_over_time(filt, "count", ctx.start - off,
                                       ctx.end - off, w_, ctx.step), off
             ).select("ts")
-        spark = ctx.rel.sparkSession
-        n = (ctx.end - ctx.start) // ctx.step + 1
-        grid = spark.range(n).select(
-            (F.lit(ctx.start) + F.col("id") * ctx.step).cast("long").alias("ts"))
-        missing = grid.join(present.distinct(), "ts", "left_anti")
-        lbl = {"absent": "true"}
-        if arg[0] == "selector":
-            lbl.update({l: val for l, op, val in arg[2] if op == "="})
-            if arg[1] is not None:
-                lbl[promql.METRIC_NAME_LABEL] = arg[1]
+        missing = ctx.grid().join(present.distinct(), "ts", "left_anti")
+        lbl = _absent_labels(arg)
         labels = F.map_from_arrays(
-            F.array(*[F.lit(k2) for k2 in lbl]),
-            F.array(*[F.lit(v2) for v2 in lbl.values()]))
+            F.array(*[F.lit(k2) for k2 in lbl]).cast("array<string>"),
+            F.array(*[F.lit(v2) for v2 in lbl.values()]).cast("array<string>"))
         return ("vector", missing.select(
             labels.alias("labels"), "ts", F.lit(1.0).alias("value")))
-    if fname in ("sort", "sort_desc", "sort_by_label", "sort_by_label_desc"):
+    if fname in _SORT_FNS:
         # Prometheus: sort/sort_desc/sort_by_label* "only affect the
         # results of instant queries, as range query results always have
         # a fixed output ordering" (docs/querying/functions.md#sort) —
-        # in range mode they are a semantic no-op pass-through.
+        # a pass-through here; eval_instant orders by a top-level one.
         k, v = _reval(args[0], ctx)
         if k != "vector":
             raise PromqlError(f"{fname} takes a vector")
@@ -1920,10 +1202,10 @@ def _reval_call(node, ctx: _RCtx):
         k, v = _reval(arg, ctx)
         if k != "vector":
             raise PromqlError("round takes a vector first argument")
-        tok, tov = _reval(rest[0], ctx) if rest else ("scalar", 1.0)
-        if tok != "scalar":
-            raise PromqlError("round(): to must be a scalar")
-        to = float(tov)
+        # PromQL round(v, to=1): nearest multiple of ``to``, ties away
+        # from the floor (floor(v/to + 0.5) * to — promql/functions.go
+        # funcRound)
+        to = _scalar_arg(rest[0], ctx, fname) if rest else 1.0
         if to <= 0:
             raise PromqlError("round(): to must be positive")
         out = v.withColumn(
@@ -1941,7 +1223,7 @@ def _reval_call(node, ctx: _RCtx):
             return ("stepscalar", v)
         per_t = v.groupBy("ts").agg(F.count(F.lit(1)).alias("__n"),
                                     F.first("value").alias("__v"))
-        out = _grid_df(ctx).join(per_t, "ts", "left").select(
+        out = ctx.grid().join(per_t, "ts", "left").select(
             "ts",
             F.when(F.col("__n") == 1, F.col("__v"))
             .otherwise(F.lit(float("nan"))).cast("double").alias("value"))
@@ -1949,16 +1231,14 @@ def _reval_call(node, ctx: _RCtx):
     if fname == "vector":
         (arg,) = args
         k, v = _reval(arg, ctx)
-        empty = F.map_from_arrays(F.array().cast("array<string>"),
-                                  F.array().cast("array<string>"))
         if k == "vector":
             return ("vector", v)  # vector(vector) is the identity
         if k == "stepscalar":
             return ("vector", v.select(
-                empty.alias("labels"), "ts",
+                _empty_labels(), "ts",
                 F.col("value").cast("double").alias("value")))
-        return ("vector", _grid_df(ctx).select(
-            empty.alias("labels"), "ts",
+        return ("vector", ctx.grid().select(
+            _empty_labels(), "ts",
             F.lit(float(v)).alias("value")))
     if fname == "info":
         if len(args) not in (1, 2):
@@ -1974,8 +1254,46 @@ def _reval_call(node, ctx: _RCtx):
                                  [m[0] for m in data_ms] or None,
                                  join_ts=True)
         return ("vector", _strip_r(out))
-    raise PromqlError(
-        f"function {fname!r} is not supported in range queries")
+    raise PromqlError(f"unsupported function {fname!r} in the text front-end")
+
+
+def _absent_labels(arg) -> dict[str, str]:
+    """absent()/absent_over_time() output labels (promql/functions.go
+    createLabelsForAbsentFunction): the argument selector's equality
+    matchers, minus ``__name__``; a label matched more than once, or by a
+    non-equality matcher, is dropped.  Any other argument shape → {}."""
+    lbl: dict[str, str] = {}
+    if arg[0] != "selector":
+        return lbl
+    has: set[str] = set()
+    for label, op, value in arg[2]:
+        if label == promql.METRIC_NAME_LABEL:
+            continue
+        if op == "=" and label not in has:
+            lbl[label] = value
+            has.add(label)
+        else:
+            lbl.pop(label, None)
+    return lbl
+
+
+def _scalar_math(fname: str, x: float) -> float:
+    """A _SCALAR_FNS function of a plain scalar, IEEE-754 like Go's math
+    package (ln(0) = -Inf, sqrt(-1) = NaN) where Python's raises."""
+    fns = {"abs": abs, "ceil": math.ceil, "floor": math.floor,
+           "exp": math.exp, "ln": math.log, "log2": math.log2,
+           "log10": math.log10, "sqrt": math.sqrt,
+           "sgn": lambda v: float((v > 0) - (v < 0)),
+           "deg": math.degrees, "rad": math.radians}
+    fn = fns.get(fname) or getattr(math, fname)
+    try:
+        return float(fn(x))
+    except OverflowError:
+        return math.inf
+    except ValueError:
+        if fname in ("ln", "log2", "log10") and x == 0:
+            return -math.inf
+        return math.nan
 
 
 def _reval_agg(node, ctx: _RCtx):
@@ -2001,7 +1319,7 @@ def _agg_vector(fname, by, without, param, v: DataFrame, ctx: _RCtx):
     shared by the AST path and callers with externally-produced vectors
     (the tiered range surface)."""
     if fname in ("topk", "bottomk"):
-        kv = int(_reval(param, ctx)[1])
+        kv = int(_scalar_arg(param, ctx, fname))
         order = (F.col("value").desc() if fname == "topk"
                  else F.col("value").asc())
         from pyspark.sql.window import Window as W
@@ -2016,7 +1334,7 @@ def _agg_vector(fname, by, without, param, v: DataFrame, ctx: _RCtx):
         return ("vector", v.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") <= kv).drop("__rn"))
     if fname in ("limitk", "limit_ratio"):
-        pv = float(_reval(param, ctx)[1])
+        pv = _scalar_arg(param, ctx, fname)
         out = _limit_agg(fname, pv, v, by, without, extra_keys=("ts",))
         return ("vector", out.select("labels", "ts", "value"))
     if fname == "count_values":
@@ -2030,8 +1348,8 @@ def _agg_vector(fname, by, without, param, v: DataFrame, ctx: _RCtx):
                    "ts", "value"))
         return ("vector", out)
     if fname == "quantile":
-        q = float(_reval(param, ctx)[1])
-        # Range-mode groups are (retained labels, ts) — series cardinality
+        q = _scalar_arg(param, ctx, fname)
+        # Groups are (retained labels, ts) — series cardinality
         # per eval step, unbounded at scale — so both paths run on the
         # grouped rank-probe engine (bit-identical to percentile()).
         if without is not None:
@@ -2043,8 +1361,9 @@ def _agg_vector(fname, by, without, param, v: DataFrame, ctx: _RCtx):
             return ("vector",
                     out.select(F.col("__kl").alias("labels"), "ts", "value"))
         new_labels = F.map_from_arrays(
-            F.array(*[F.lit(n) for n in (by or [])]),
-            F.array(*[F.col("labels").getItem(n) for n in (by or [])]))
+            F.array(*[F.lit(n) for n in (by or [])]).cast("array<string>"),
+            F.array(*[F.col("labels").getItem(n) for n in (by or [])])
+            .cast("array<string>"))
         keyed = v.select(new_labels.alias("__lbl"), "ts", "value").withColumn(
             "__gk", promql.canonical_labels_json(F.col("__lbl")))
         out = _sketch.grouped_quantile_cont(
@@ -2064,8 +1383,8 @@ def _agg_vector(fname, by, without, param, v: DataFrame, ctx: _RCtx):
     keys = [F.col("labels").getItem(n).alias(n) for n in (by or [])]
     grouped = v.groupBy(*keys, "ts").agg(agg(F.col("value")).alias("value"))
     new_labels = F.map_from_arrays(
-        F.array(*[F.lit(n) for n in (by or [])]),
-        F.array(*[F.col(n) for n in (by or [])]))
+        F.array(*[F.lit(n) for n in (by or [])]).cast("array<string>"),
+        F.array(*[F.col(n) for n in (by or [])]).cast("array<string>"))
     return ("vector", grouped.select(new_labels.alias("labels"), "ts", "value"))
 
 
@@ -2080,7 +1399,7 @@ def _reval_binop(node, ctx: _RCtx):
         return _hist_binop(op, lk, lv, rk, rv, m)
 
     if lk == "scalar" and rk == "scalar":
-        return _eval_binop(node, _Ctx(ctx.rel, ctx.end, ctx.lookback))
+        return ("scalar", _scalar_binop(op, lv, rv))
 
     if "stepscalar" in (lk, rk):
         return _reval_stepscalar_binop(op, lk, lv, rk, rv, bool_mode)
@@ -2106,7 +1425,7 @@ def _reval_binop(node, ctx: _RCtx):
         group = m.get("group")
 
         def _runique(side: DataFrame, what: str) -> DataFrame:
-            # Range-mode analogue of promql._unique_side, keyed per eval
+            # Grid analogue of promql._unique_side, keyed per eval
             # step: PromQL errors with "found duplicate series for the
             # match group" when a match key is not unique at a timestamp —
             # a plain inner join would instead emit a silent cross product.
@@ -2136,14 +1455,19 @@ def _reval_binop(node, ctx: _RCtx):
         rsel = r.select("__mk", "ts", F.col("labels").alias("__rl"),
                         F.col("value").alias("__rval"))
         j = lsel.join(rsel, ["__mk", "ts"])
-        if group == "left":
-            out_labels = F.map_filter(
-                F.col("__ll"), lambda k2, _: k2 != F.lit(promql.METRIC_NAME_LABEL))
-        elif group == "right":
-            out_labels = F.map_filter(
-                F.col("__rl"), lambda k2, _: k2 != F.lit(promql.METRIC_NAME_LABEL))
-        else:
+        # result labels as promql.binop / promql/engine.go resultMetric:
+        # __name__ is dropped except by a plain (filtering) comparison
+        keep_name = op in promql._CMP_OPS and not bool_mode
+        if group is None and (on is not None or not keep_name):
             out_labels = promql.match_labels(F.col("__ll"), on, ignoring)
+        elif group is None:  # filter comparison: Del(ignoring) only
+            drop = F.array(*[F.lit(k2) for k2 in (ignoring or [])])
+            out_labels = F.map_filter(
+                F.col("__ll"), lambda k2, _: ~F.array_contains(drop, k2))
+        else:
+            many = F.col("__ll") if group == "left" else F.col("__rl")
+            out_labels = many if keep_name else F.map_filter(
+                many, lambda k2, _: k2 != F.lit(promql.METRIC_NAME_LABEL))
         if group and m.get("include"):
             # group_left(extra)/group_right(extra): copy the listed labels
             # from the "one" side onto the many side's label set
@@ -2163,9 +1487,9 @@ def _reval_binop(node, ctx: _RCtx):
             return ("vector", j.select(
                 out_labels.alias("labels"), "ts",
                 F.when(cond, 1.0).otherwise(0.0).alias("value")))
-        # filter semantics keep the lhs sample (labels incl. __name__)
+        # filter semantics: the surviving value is the lhs operand
         return ("vector", j.filter(cond).select(
-            F.col("__ll").alias("labels"), "ts",
+            out_labels.alias("labels"), "ts",
             F.col("__lval").alias("value")))
 
     # scalar ∘ vector — per-row, ts passes through
@@ -2236,6 +1560,67 @@ def _reval_stepscalar_binop(op, lk, lv, rk, rv, bool_mode):
     return ("vector", out.select("labels", "ts", "value"))
 
 
+def _scalar_binop(op: str, a: float, b: float) -> float:
+    """scalar ∘ scalar with IEEE-754 semantics like Go's math package
+    (PromQL's scalar engine): x/0 = ±Inf, 0/0 = NaN, fmod(x, 0) = NaN,
+    pow overflow = Inf — Python's operators raise instead.  Comparisons
+    yield 1/0."""
+    if op == "/":
+        if b != 0:
+            return a / b
+        if a == 0 or math.isnan(a):
+            return math.nan
+        return math.copysign(math.inf, a) * math.copysign(1.0, b)
+    if op == "%":
+        try:
+            return math.fmod(a, b)
+        except ValueError:
+            return math.nan
+    if op == "^":
+        if a == 0 and b < 0:
+            # IEEE pow: -Inf only for a NEGATIVE-zero base raised to a
+            # negative odd integer (Go math.Pow); +Inf otherwise.
+            if (math.copysign(1.0, a) < 0 and math.isfinite(b)
+                    and b == int(b) and int(b) % 2 != 0):
+                return -math.inf
+            return math.inf
+        try:
+            return math.pow(a, b)
+        except OverflowError:
+            return math.inf
+        except ValueError:
+            return math.nan
+    if op == "atan2":
+        return math.atan2(a, b)
+    fns = {"+": lambda: a + b, "-": lambda: a - b, "*": lambda: a * b,
+           "==": lambda: a == b, "!=": lambda: a != b, ">": lambda: a > b,
+           "<": lambda: a < b, ">=": lambda: a >= b, "<=": lambda: a <= b}
+    if op not in fns:
+        raise PromqlError(f"{op} needs two vectors")
+    return float(fns[op]())
+
+
+def _empty_labels():
+    return F.map_from_arrays(F.array().cast("array<string>"),
+                             F.array().cast("array<string>")).alias("labels")
+
+
+def _result(k: str, v, ctx: _RCtx) -> DataFrame:
+    """An evaluation result as (labels, ts, value) rows — (labels, ts,
+    hist) when histogram-valued; scalars become one labels-less row per
+    grid point."""
+    if k == "hvector":
+        return v.select("labels", F.col("ts").cast("long").alias("ts"), "hist")
+    if k == "scalar":
+        return ctx.grid().select(_empty_labels(), "ts",
+                                 F.lit(float(v)).alias("value"))
+    if k == "stepscalar":
+        return v.select(_empty_labels(),
+                        F.col("ts").cast("long").alias("ts"),
+                        F.col("value").cast("double").alias("value"))
+    return _strip_r(v)
+
+
 def eval_range(rel: DataFrame, query, start: int, end: int, step: int,
                lookback: int = 300,
                hist_rel: DataFrame | None = None,
@@ -2247,46 +1632,84 @@ def eval_range(rel: DataFrame, query, start: int, end: int, step: int,
     / argless calendar functions are per-eval-point scalars combinable
     with vectors (join on ts).  ``sort``/``sort_desc``/``sort_by_label*``
     are accepted as pass-throughs (Prometheus: they only affect instant
-    query results); ``@``-fixed selectors — instant and range, including
-    the ``start()``/``end()`` sugar — evaluate once and hold constant
-    across the grid.  Subqueries lower as pseudo-samples (one fine-grid
-    inner evaluation feeding the normal grid pass — any inner expression
-    the range evaluator handles), including HISTOGRAM-valued inners under
-    rate/increase/delta AND the avg/sum/count/last over-time aggregates
+    query results); ``@``-fixed selectors, range functions and
+    subqueries — including the ``start()``/``end()`` sugar — evaluate
+    once at the pinned time and hold constant across the grid.
+    Subqueries lower as pseudo-samples (one fine-grid inner evaluation
+    feeding the normal grid pass — any inner expression), including
+    HISTOGRAM-valued inners under rate/increase/delta AND the
+    avg/sum/count/last over-time aggregates
     (``avg_over_time(rate(h[5m:1m])[30m:5m])`` is a second grid pass over
-    the same pseudo-samples).  Remaining restrictions (raising
-    ``PromqlError``): bare subqueries at the top level (a range-vector
-    result — invalid in Prometheus range queries too; instant mode
-    returns the matrix).  ``@`` works on selectors, inside subqueries,
-    and on the subquery itself (``expr[r:s] @ t`` — grid-constant, like
-    every @-fixed form).
+    the same pseudo-samples).  A bare subquery or range selector at the
+    top level raises ``PromqlError`` (a range-vector result — invalid in
+    Prometheus range queries too; :func:`eval_instant` returns the
+    matrix).
 
-    ``hist_rel`` enables NATIVE-HISTOGRAM selectors on the grid (see
-    :func:`eval_instant`); a top-level histogram result returns
-    (labels, ts, hist) rows."""
+    ``hist_rel`` (labels, ts, hist) enables NATIVE-HISTOGRAM selectors:
+    metric names present in it resolve to structured histogram samples,
+    so ``histogram_quantile(0.9, rate(h[5m]))``,
+    ``histogram_count/sum/avg/stddev/stdvar`` and ``histogram_fraction``
+    evaluate on the native path (functions/native_hist.py).  A top-level
+    histogram result returns (labels, ts, hist) rows — the structured
+    sample IS the result, as in the Prometheus HTTP API's histogram
+    payloads."""
     if step <= 0:
         raise PromqlError("step must be positive")
     node = parse(query) if isinstance(query, str) else query
     node = resolve_at(node, start, end)
-    k, v = _reval(node, _RCtx(rel, start, end, step, lookback,
-                              hist_rel=hist_rel, hist_metrics=hist_metrics))
-    if k == "hvector":
-        return v.select("labels", F.col("ts").cast("long").alias("ts"), "hist")
-    empty = F.map_from_arrays(F.array().cast("array<string>"),
-                              F.array().cast("array<string>"))
-    if k == "scalar":
-        spark = rel.sparkSession
-        n = (int(end) - int(start)) // int(step) + 1
-        return spark.range(n).select(
-            empty.alias("labels"),
-            (F.lit(int(start)) + F.col("id") * int(step)).cast("long").alias("ts"),
-            F.lit(float(v)).alias("value"),
-        )
-    if k == "stepscalar":
-        return v.select(empty.alias("labels"),
-                        F.col("ts").cast("long").alias("ts"),
-                        F.col("value").cast("double").alias("value"))
-    return _strip_r(v)
+    ctx = _RCtx(rel, start, end, step, lookback,
+                hist_rel=hist_rel, hist_metrics=hist_metrics)
+    return _result(*_reval(node, ctx), ctx)
+
+
+def eval_instant(rel: DataFrame, query, at_ts: int,
+                 lookback: int = 300,
+                 hist_rel: DataFrame | None = None,
+                 hist_metrics: "set[str] | None" = None) -> DataFrame:
+    """Evaluate ``query`` (text, or a pre-parsed AST) as a PromQL INSTANT
+    query at ``at_ts``: the one-point range query [at_ts, at_ts] (as
+    Prometheus runs it), projected to the instant result shapes —
+    (labels, value) for vectors and scalars (a scalar is one labels-less
+    row), (labels, ts, hist) for histogram results (``ts`` = the
+    evaluation time).  A top-level ``sort``/``sort_desc``/
+    ``sort_by_label[_desc]`` orders the result.  A TOP-LEVEL range
+    selector or subquery returns the Prometheus "matrix" result type as
+    (labels, ts, value) rows — (labels, ts, hist) when histogram-valued.
+    ``hist_rel``: see :func:`eval_range`."""
+    node = parse(query) if isinstance(query, str) else query
+    node = resolve_at(node, at_ts, at_ts)
+    ctx = _RCtx(rel, at_ts, at_ts, 1, lookback,
+                hist_rel=hist_rel, hist_metrics=hist_metrics)
+    # TOP-LEVEL matrix results: a bare range selector returns the raw
+    # samples in (t−range, t]; a bare subquery its aligned pseudo-samples
+    # — Prometheus result type "matrix", as (labels, ts, value|hist) rows.
+    # Handled here, so every INNER position keeps its pointed type error.
+    if node[0] == "selector" and node[3] is not None:
+        _, name, matchers, range_s, offset_s, at_s = node
+        end = (at_s if at_s is not None else at_ts) - offset_s
+        hist = name is not None and name in ctx.hist_metrics
+        filt = _matcher_filter(ctx.hist_rel if hist else rel, name, matchers)
+        return filt.filter(F.col("ts").between(end - range_s + 1, end)).select(
+            "labels", F.col("ts").cast("long").alias("ts"),
+            "hist" if hist else "value")
+    if node[0] == "subquery":
+        sq_ctx = ctx if node[5] is None else ctx.at(node[5])
+        k, pseudo, _r, _o = _rsub_points(_unpin(node), sq_ctx)
+        return pseudo.select("labels", F.col("ts").cast("long").alias("ts"),
+                             "hist" if k == "hvector" else "value")
+    out = _result(*_reval(node, ctx), ctx)
+    if "hist" not in out.columns:
+        out = out.drop("ts")
+    if node[0] == "call" and node[1] in _SORT_FNS:
+        fname, labels = node[1], [a[1] for a in node[2][1:]]
+        if fname.startswith("sort_by_label"):
+            out = promql.sort_by_label(
+                promql._ensure_series_key(out), labels,
+                desc=fname.endswith("desc")).drop("series_key")
+        else:
+            out = out.orderBy(F.col("value").asc() if fname == "sort"
+                              else F.col("value").desc())
+    return out
 
 
 def _api_hist(h) -> dict:

@@ -103,6 +103,15 @@ def _literal_parts(pattern: str) -> tuple[str | None, str | None, str | None]:
     return prefix, suffix, contains
 
 
+def check_regex(pattern: str) -> None:
+    """Raise ``ValueError`` for a malformed regex matcher pattern — in the
+    driver, before any Spark job could fail on it in an executor."""
+    try:
+        re.compile(pattern)
+    except re.error as exc:
+        raise ValueError(f"invalid regex matcher pattern {pattern!r}: {exc}") from exc
+
+
 def regex_predicate(col: Column, pattern: str) -> Column:
     """Anchored regex predicate with the literal fast path.
 
@@ -117,10 +126,7 @@ def regex_predicate(col: Column, pattern: str) -> Column:
     """
     if _LITERAL_RE.match(pattern):
         return col == F.lit(pattern)
-    try:
-        re.compile(pattern)
-    except re.error as exc:
-        raise ValueError(f"invalid regex matcher pattern {pattern!r}: {exc}") from exc
+    check_regex(pattern)
     anchored = col.rlike(f"^(?:{pattern})$")
     if pattern.endswith(".*") or pattern.endswith(".+"):
         # Open-ended tail: prefix check alone is pushable and often decisive.

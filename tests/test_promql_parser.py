@@ -223,7 +223,9 @@ def test_topk_quantile_count_values(rel):
 
 
 def test_absent_and_absent_over_time(rel):
-    assert ev(rel, "absent(nosuch)") == [((("absent", "true"),), 1.0)]
+    # output labels: the selector's equality matchers minus __name__
+    # (promql/functions.go createLabelsForAbsentFunction) — none here
+    assert ev(rel, "absent(nosuch)") == [((), 1.0)]
     assert ev(rel, "absent(mem_bytes)") == []
     got = ev(rel, 'absent_over_time(nosuch{zone="eu"}[5m])')
     assert got and dict(got[0][0])["zone"] == "eu"
@@ -1581,3 +1583,41 @@ def test_toplevel_matrix_to_api(spark):
         "result": [{"metric": {"__name__": "m", "a": "x"},
                     "values": [(120, "120"), (180, "180")]}],
     }
+
+
+@pytest.fixture(scope="module")
+def ctr_db(spark, tmp_path_factory):
+    from mandodb_spark import TSDB
+
+    db = TSDB(spark, str(tmp_path_factory.mktemp("ctr") / "store"))
+    db.insert_rows([("ctr", {"job": "a"}, k * 60, float(k))
+                    for k in range(61)])
+    return db
+
+
+def test_fanout_guard_counts_grid_points(ctr_db):
+    """The fan-out guard caps reach/step + 1 at the grid's point count:
+    a 10m window at a 1s step is 600 covering points per sample, but a
+    one-point grid serves each sample at most once."""
+    got = ctr_db.promql_range("rate(ctr[10m])", 3000, 3000, 1).collect()
+    assert [(r["ts"], r["value"]) for r in got] == \
+        [(3000, pytest.approx(1 / 60))]
+    # instant queries are one-point grids: a day of lookback is fine
+    got = ctr_db.promql("ctr", 3000, lookback=86_400).collect()
+    assert [r["value"] for r in got] == [50.0]
+    # a grid with more points than the cap still fails fast
+    with pytest.raises(PromqlError, match="fan-out 600 exceeds"):
+        ctr_db.promql_range("rate(ctr[10m])", 2000, 3000, 1)
+
+
+@pytest.mark.parametrize("q", ['ctr{job=~"("}', 'ctr{job!~"a["}',
+                               'sum(rate(ctr{job=~"(a"}[5m]))'])
+def test_bad_regex_matcher_fails_at_parse(ctr_db, q):
+    """A malformed regex matcher raises PromqlError from the parser —
+    before any DataFrame exists, so no Spark job can fail on it."""
+    with pytest.raises(PromqlError, match="invalid regex"):
+        parse(q)
+    with pytest.raises(PromqlError, match="invalid regex"):
+        ctr_db.promql(q, 3000)
+    with pytest.raises(PromqlError, match="invalid regex"):
+        ctr_db.promql_range(q, 2400, 3000, 60)

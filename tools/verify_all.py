@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """One-command round checkpoint: pytest + dual-tier oracle parity (both
-scales) + bench, summarized as a single JSON line.
+scales) + the benchmark's correctness run + bench, summarized as a single
+JSON line.
 
 Encodes the per-round validation workflow (see README "Correctness"):
 
     python tools/verify_all.py            # full checkpoint (~20-30 min)
-    python tools/verify_all.py --fast     # skip sf0.1 parity and bench
+    python tools/verify_all.py --fast     # skip sf0.1 parity, benchmark, bench
 
 Exit code 0 iff every stage passed.  Each stage's full log lands in
 /tmp/verify_all/<stage>.log for triage.
@@ -49,6 +50,11 @@ def main() -> int:
     if not fast:
         stages["oracle_sf01"] = [py, "tools/oracle_check.py",
                                  "/root/testdata/sf0.1", "--extra"]
+        # perfbench checks every dashboard result against DuckDB and
+        # exits non-zero on a wrong one
+        stages["perfbench_dashboard"] = [
+            py, "perfbench/run.py", "--workload", "dashboard", "--seed", "1",
+            "--seconds", "22", "--trace", "0"]
         stages["bench"] = [py, "bench.py"]
     report = {}
     for name, cmd in stages.items():
